@@ -4,12 +4,15 @@ entry(spark)      -> flagship query on /root/testdata/sf0.001
 queries()         -> {name: (spark, sf_dir) -> DataFrame} per SURVEY.md §2
 oracle_sql()      -> {name: DuckDB SQL} for every SQL-expressible query
 
-Implementations live in osmexpress_spark.queries (relational inventory
-+ events analytics), queries_data (LLM-pipeline operators),
-queries_osm (fixture-dataset OSM pipelines), and queries_update
-(update/diff family). EVERY registered query carries a DuckDB oracle —
-including the OSM-domain pipelines, whose oracles run over an
-independent pyarrow copy of the deterministic fixture.
+Every query is declared once with ``@defq`` (osmexpress_spark/
+registry.py) in one of the query modules: queries (relational
+inventory + events analytics), queries_data (LLM-pipeline operators),
+queries_osm (fixture-dataset OSM pipelines) and queries_update
+(update/diff family).  Both functions here read the registry's live
+view; queries declared ``pending=True`` stay out of them.  EVERY
+registered query carries a DuckDB oracle — including the OSM-domain
+pipelines, whose oracles run over an independent pyarrow copy of the
+deterministic fixture and are resolved lazily by oracle_sql().
 """
 
 from __future__ import annotations
@@ -26,9 +29,9 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the star-join revenue rollup (Catalyst join ordering +
     broadcast dims + decimal-exact aggregation) at sf0.001."""
-    from osmexpress_spark import queries as Q
+    from osmexpress_spark.registry import live
 
-    return Q.SPARK_QUERIES["q_star_join_revenue"](spark, "/root/testdata/sf0.001")
+    return live()["q_star_join_revenue"](spark, "/root/testdata/sf0.001")
 
 
 # The driver validates the FIRST 50 entries of queries() in
@@ -76,17 +79,9 @@ def _latest_green_round() -> dict[str, int]:
 
 
 def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from osmexpress_spark import queries as Q
-    from osmexpress_spark import queries_data as QD
-    from osmexpress_spark import queries_osm as QO
-    from osmexpress_spark import queries_update as QU
+    from osmexpress_spark.registry import live
 
-    merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    merged.update(Q.SPARK_QUERIES)
-    merged.update(QD.SPARK_QUERIES)
-    merged.update(QO.SPARK_QUERIES)
-    merged.update(QU.SPARK_QUERIES)
-    return merged
+    return {name: q.build for name, q in live().items()}
 
 
 def priority_order() -> list[str]:
@@ -104,14 +99,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    from osmexpress_spark import queries as Q
-    from osmexpress_spark import queries_data as QD
-    from osmexpress_spark import queries_osm as QO
-    from osmexpress_spark import queries_update as QU
+    from osmexpress_spark.registry import live
 
-    out: dict[str, str] = {}
-    out.update(Q.ORACLE_SQL)
-    out.update(QD.ORACLE_SQL)
-    out.update(QO.oracle_sql())
-    out.update(QU.ORACLE_SQL)
-    return out
+    return {name: q.sql() for name, q in live().items() if q.oracle is not None}

@@ -1,9 +1,13 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Per-query sweep: every registry query declared ``bench=True`` plus
+a few pipeline lines, at $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].  The gated,
+repeated benchmark is perfbench/run.py (BENCHMARK.json); this is the
+one-rep-per-line sweep.
 
-Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+Prints two JSON lines: the full record, then a compact summary
+  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, ...}
+that fits the 2000-char tail it is parsed from (see summary_line).
 
 Each query is materialized through the noop sink (full compute, all
 columns, no driver collection cost) after a warmup action that absorbs
@@ -24,150 +28,40 @@ from osmexpress_spark import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-HEADLINE = [
-    "q1_pricing_summary",
-    "q_star_join_revenue",
-    "q_topk_per_group",
-    "q_count_distinct",
-    "q_range_scan",
-    "q_last_version_wins",
-    "q_sessionize",
-    "q_asof_join",
-    "q_window_tumbling",
-    "q_transitive_closure",
-    "q_doc_token_stats",
-    "q_minhash_lsh_pairs",
-    "q_ngram_jaccard",
-    "q_dup_clusters",
-    "q_bm25_topk",
-    "q_profile_documents",
-    "q_quality_buckets",
-    "q_embedding_topk",
-    "q_embedding_ann_bucketed",
-    "q_quantized_ann",
-    "q_kmeans_assign",
-    "q_stratified_sample",
-    "q_contamination",
-    "q_semantic_dedup",
-    "q_importance_resample",
-    "q_pq_topk",
-    "q_doc_dup_spans",
-    "q_gopher_rules",
-    "q_curation_pipeline",
-    "q_augmented_diff_analog",
-    "osm_extract_bbox",
-    "osm_radius_pairs",
-    "osm_way_lengths",
-    "osm_tile_counts",
-    # round 4: sketches, model scoring, band join, OSM analytics
-    "q_kmv_distinct",
-    "q_cms_heavy_hitters",
-    "q_quality_logreg",
-    "q_bigram_perplexity",
-    "q_band_join",
-    "osm_way_areas",
-    "osm_way_intersections",
-    "q_event_funnel",
-    "q_fuzzy_token_pairs",
-    "osm_pagerank",
-    "osm_triangle_count",
-    # round 6: the promoted sketch/exact-quantile/kmeans/BPE family
-    "q_quantile_sketch",
-    "q_exact_quantiles",
-    "q_exact_quantiles_by",
-    "q_kmeans_train",
-    "q_bpe_pair_counts",
-    "q_frequent_tokens",
-    # round 7: the promoted round-6 staging set (tokenizer-vocab,
-    # drift-outliers, retrieval-ranking, text, classifier, shard-sink,
-    # dedup-decontamination, embedding-similarity, events, curation)
-    "q_bpe_merges",
-    "q_dist_drift",
-    "q_mad_outliers",
-    "q_rrf_fusion",
-    "q_html_strip",
-    "q_token_budget",
-    "q_dist_drift_by",
-    "q_nb_confusion",
-    "q_shard_manifest",
-    "q_source_overlap",
-    "q_kcenter_select",
-    "q_nb_reliability",
-    "q_embedding_drift",
-    "q_hard_negatives",
-    "q_manifest_merge",
-    "q_event_spikes",
-    "q_split_leakage",
-    # round 8: the promoted round-7 staging set (multimodal-neardup,
-    # embedding-similarity, sampling-curation, profiling-quality,
-    # rollup-store, drift-outliers, dedup, sketches, retrieval, text)
-    "q_stream_drift",
-    "q_hard_negatives_ivf",
-    "q_embedding_gram",
-    "q_softdedup_weights",
-    "q_vocab_growth",
-    "q_ngram_novelty",
-    "q_rank_blend",
-    "q_budget_by_domain",
-    "q_modality_alignment",
-    "q_profile_diff",
-    "q_image_near_dup",
-    "q_audio_fingerprint",
-    "q_distinctive_terms",
-    "q_mix_plan",
-    "q_image_ingest_dedup",
-    "q_format_census",
-    "q_quota_fill",
-    "q_audio_flac_stats",
-    "q_audio_ingest_dedup",
-    "q_image_dup_clusters",
-    "q_audio_g711_stats",
-    "q_audio_adpcm_stats",
-    "q_image_jpeg_stats",
-    "q_bm25_store",
-    "q_kmv_distinct_by",
-    "q_dedup_masks",
-    "q_bitext_mine",
-    "q_wav_segments_stats",
-    "q_rollup_store",
-    "q_hashed_features",
-    "q_image_webp_stats",
-    "q_stream_rollup",
-    # round 9: the promoted round-8 staging set (osmx-migration,
-    # sketches)
-    "osm_osmx_roundtrip",
-    "q_join_size_estimate",
-    # round 10: the promoted round-9 staging set (exact similarity
-    # join, tokenizer apply, join ordering, AU/mp3 containers)
-    "q_prefix_filter_pairs",
-    "q_bpe_token_census",
-    "q_join_order_advice",
-    "q_audio_au_stats",
-    "q_audio_mp3_census",
-    # round 11: the promoted round-10 staging set (crawl ingestion
-    # surface, phonetic record linkage, mp3 bitstream decode)
-    "q_zstd_census",
-    "q_warc_census",
-    "q_url_parse",
-    "q_charset_decode",
-    "q_ogg_census",
-    "q_robots_admit",
-    "q_record_linkage",
-    "q_audio_mp3_decode",
-]
+# Queries whose entries lead every summary line, whatever their time:
+# summary entries are grow-only, so a name once reported by the final
+# line must never fall out of it.
+ALWAYS_REPORT = (
+    "osm_osmx_roundtrip", "q_prefix_filter_pairs", "osm_pbf_sink",
+    "q_augmented_diff_analog", "q_image_near_dup", "q_bm25_store",
+    "q_frequent_tokens", "osm_extract_bbox", "q_ngram_jaccard",
+    "osm_update_batches",
+)
+# The final JSON line must fit the 2000-char stdout tail it is parsed
+# from; the margin covers the newline and any trailing output.
+SUMMARY_BUDGET = 1900
 
-# Staged-but-not-yet-promoted queries get their planned bench lines
-# listed here so promotion cannot silently drop perf coverage
-# (tests/test_bench_hygiene.py checks this list against the pending
-# registry). At the next promotion these move into HEADLINE with a
-# family assignment in tests/test_bench_hygiene.py FAMILIES.
-PENDING_HEADLINE: list[str] = [
-    "q_psl_domain",
-    "q_audio_mp3_pcm",
-    "q_vorbis_setup",
-    "q_vorbis_pcm",
-    "q_audio_aac_census",
-]
+
+def summary_line(fields: dict, timings: dict[str, float]) -> str:
+    """`fields` as one compact JSON line with its "queries" entry
+    packed from `timings`: ALWAYS_REPORT names first (those missing
+    from `timings` are skipped), then slowest first, for as long as the
+    line fits SUMMARY_BUDGET chars."""
+    order = [n for n in ALWAYS_REPORT if n in timings] + [
+        k for k, _ in sorted(timings.items(), key=lambda kv: -kv[1])
+        if k not in ALWAYS_REPORT
+    ]
+
+    def line(qs: dict[str, float]) -> str:
+        return json.dumps({**fields, "queries": qs}, separators=(",", ":"))
+
+    packed: dict[str, float] = {}
+    for name in order:
+        trial = {**packed, name: round(timings[name], 2)}
+        if len(line(trial)) > SUMMARY_BUDGET:
+            break
+        packed = trial
+    return line(packed)
 
 
 def _loadavg() -> list[float]:
@@ -180,17 +74,11 @@ def _loadavg() -> list[float]:
 
 def main() -> None:
     load_start = _loadavg()
-    from osmexpress_spark import queries as Q
     from osmexpress_spark import queries_data as QD
     from osmexpress_spark import queries_osm as QO
-    from osmexpress_spark import queries_update as QU
+    from osmexpress_spark.registry import live
 
-    registry = {
-        **Q.SPARK_QUERIES,
-        **QD.SPARK_QUERIES,
-        **QO.SPARK_QUERIES,
-        **QU.SPARK_QUERIES,
-    }
+    registry = live()
 
     spark = get_spark(
         app_name="osmx-bench",
@@ -200,19 +88,16 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # warmup: session/codegen startup + fixture materialization
-    Q.SPARK_QUERIES["q_projection"](spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    QO.SPARK_QUERIES["osm_stats"](spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # r12 warmup completion (measured; OPTIMIZATION_r12.md "bench
-    # contract"): the two warmup queries above never start a Python
-    # worker, never shuffle and never broadcast, so the FIRST timed
-    # query to do each used to absorb one-time session infrastructure —
-    # ~4.8 s of Python-worker pool spin-up (fork + pandas/pyarrow/numpy
-    # imports, 32 workers) landed on q_image_near_dup and ~2-3 s of
-    # first-shuffle/aggregate/broadcast codegen on q1_pricing_summary.
+    for name in ("q_projection", "osm_stats"):
+        registry[name](spark, SF_DIR).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    # The two warmup queries above never start a Python worker, never
+    # shuffle and never broadcast, so the first timed query to do each
+    # would absorb one-time session infrastructure (Python-worker pool
+    # spin-up: fork + pandas/pyarrow/numpy imports; first-shuffle,
+    # aggregate and broadcast codegen; ~4.8 s and ~2-3 s measured on
+    # 32 cores).
     # Warm those runtime paths on SYNTHETIC range data: no fixture
     # table is touched, no query result or intermediate is cached —
     # every timed query still computes from its parquet inputs.
@@ -238,26 +123,22 @@ def main() -> None:
 
     timings: dict[str, float] = {}
 
-    # r12 measurement fix (VERDICT r11 "what's wrong" #1): the
-    # osm_osmx_roundtrip line used to pay the driver-side single-stream
-    # LMDB *artifact build* on a cold environment (23.1 s under load in
-    # the r11 driver run; ~1 s read warm), so its value measured
-    # environment warmth, not the read path the gate was adjudicated to
-    # time (r08).  Build the marker-cached artifact here, in the same
-    # untimed-fixture-warmup category as ensure_fixture_dataset above,
-    # and surface the build cost as its own ADDED line (~0 when the
-    # fixture artifact already exists, the one-off build cost when not)
-    # so nothing is hidden: build and read are now two bench metrics.
+    # osm_osmx_roundtrip times the .osmx READ path; the marker-cached
+    # LMDB artifact it reads is built here, untimed like the fixture
+    # above, and the build gets its own line (~0 s when the artifact
+    # exists) so a cold environment shows up there, not in the read.
     t0 = time.monotonic()
     QD._osmx_fixture_path()
     timings["osm_osmx_build"] = round(time.monotonic() - t0, 3)
-    for name in HEADLINE:
+    for name, query in registry.items():
+        if not query.bench:
+            continue
         # time build + execute: DataFrame construction is part of the
         # query cost (some operators run planning jobs, e.g. the
         # closure's driver probe), so excluding it would reward moving
         # work into the untimed phase.
         t0 = time.monotonic()
-        df = registry[name](spark, SF_DIR)
+        df = query(spark, SF_DIR)
         df.write.format("noop").mode("overwrite").save()
         timings[name] = round(time.monotonic() - t0, 3)
 
@@ -277,10 +158,10 @@ def main() -> None:
     ).write.format("noop").mode("overwrite").save()
     timings["q_profile_documents_approx"] = round(time.monotonic() - t0, 3)
 
-    # r12: the production trigger path for the two slowest streaming
-    # gates (VERDICT r11 next-round #7).  The declared q_stream_drift /
-    # q_stream_rollup lines keep their per-file trigger (that cadence
-    # IS the gate semantics); these ADDED lines run the SAME pipelines
+    # The production trigger path for the two slowest streaming gates.
+    # The declared q_stream_drift / q_stream_rollup lines keep their
+    # per-file trigger (that cadence IS the gate semantics); these
+    # lines run the SAME pipelines
     # through streaming.watermark_ops.file_stream with the backlog
     # drained in one availableNow batch — the daily-drop production
     # shape.  Output equality with the gate cadence is pinned by
@@ -356,16 +237,12 @@ def main() -> None:
     except ValueError:
         sf_val = sf
     total = round(sum(timings.values()), 3)
-    # Full record first (humans, PERF.md archaeology), then a SHORT
-    # summary line LAST: the driver captures a bounded tail of stdout
-    # and parses the final JSON line, and at 100+ per-query entries the
-    # full map outgrew the tail in round 7 (BENCH_r07 "parsed": null —
-    # VERDICT r07 "What's wrong" #3). The compact line always fits; the
-    # per-query map also lands in bench_detail.json beside this script.
-    # host 1/5/15-min loadavg at both ends of the run: three rounds of
-    # driver numbers landing above the idle insurance pair were
-    # adjudicated as exogenous host contention (PERF.md r7-r9); carrying
-    # the load in the record ends those adjudications (VERDICT r09).
+    # Full record first (humans, PERF.md), then a SHORT summary line
+    # LAST: the final JSON line is parsed from a bounded 2000-char tail
+    # of stdout, which the full per-query map outgrows.  The full map
+    # also lands in bench_detail.json beside this script.  Host
+    # 1/5/15-min loadavg at both ends of the run travels with the
+    # numbers so contention is visible in the record.
     detail = {
         "metric": "headline_queries_total_wall",
         "value": total,
@@ -385,55 +262,17 @@ def main() -> None:
             json.dump(detail, f, indent=1, sort_keys=True)
     except OSError:
         pass  # read-only checkout: stdout already carries the map
-    # The driver captures a bounded 2000-char tail of stdout and parses
-    # the FINAL JSON line from it (r07: the full 119-entry map made the
-    # line >2000 chars -> "parsed": null; r11: a top-10 line parsed but
-    # left PERF with n_common=4 and six 2-11x wins mislabeled
-    # "dropped_from_bench").  Fix (VERDICT r11 next-round #1a): pack the
-    # final line with as many per-query entries as fit a 1900-char
-    # budget, slowest first — ~65 of the 120 lines, everything over
-    # roughly a second — after seeding with the r11 parsed keys so no
-    # previously-reported query can ever fall out of the summary
-    # ("queries" entries are grow-only per the driver contract).  The
-    # full 3-decimal map still lands in the first stdout line and in
-    # bench_detail.json.
-    always_report = [
-        # the r11 parsed top-10 (BENCH_r11.json "parsed"."queries")
-        "osm_osmx_roundtrip", "q_prefix_filter_pairs", "osm_pbf_sink",
-        "q_augmented_diff_analog", "q_image_near_dup", "q_bm25_store",
-        "q_frequent_tokens", "osm_extract_bbox", "q_ngram_jaccard",
-        "osm_update_batches",
-    ]
-    order = always_report + [
-        k for k, _ in sorted(timings.items(), key=lambda kv: -kv[1])
-        if k not in always_report
-    ]
-    summary_queries: dict[str, float] = {}
-    budget = 1900
-
-    def _line(qs: dict[str, float]) -> str:
-        return json.dumps(
-            {
-                "metric": "headline_queries_total_wall",
-                "value": total,
-                "unit": "sec",
-                "queries": qs,
-                "n_queries": len(timings),
-                "detail": "bench_detail.json",
-                "sf": sf_val,
-                "loadavg_start": load_start,
-                "loadavg_end": detail["loadavg_end"],
-            },
-            separators=(",", ":"),
-        )
-
-    for name in order:
-        trial = dict(summary_queries)
-        trial[name] = round(timings[name], 2)
-        if len(_line(trial)) > budget:
-            break
-        summary_queries = trial
-    print(_line(summary_queries))
+    print(summary_line({
+        "metric": "headline_queries_total_wall",
+        "value": total,
+        "unit": "sec",
+        "queries": {},
+        "n_queries": len(timings),
+        "detail": "bench_detail.json",
+        "sf": sf_val,
+        "loadavg_start": load_start,
+        "loadavg_end": detail["loadavg_end"],
+    }, timings))
     spark.stop()
 
 

@@ -33,8 +33,6 @@ pivot) the reference lacks but our SQL surface exposes for free.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -43,19 +41,7 @@ from pyspark.sql import types as T
 
 from .operators.asof import asof_join
 from .operators.closure import transitive_closure
-
-SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def defq(name: str, oracle: str | None = None):
-    def wrap(fn):
-        SPARK_QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return wrap
+from .registry import defq
 
 
 def _ntz_to_ltz(df: DataFrame) -> DataFrame:
@@ -139,6 +125,7 @@ def money(col):
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     """,
+    family="relational-core", bench=True,
 )
 def q1_pricing_summary(spark, sf_dir):
     li = t(spark, sf_dir, "lineitem")
@@ -189,6 +176,7 @@ def q_point_lookup(spark, sf_dir):
        OR (l_orderkey BETWEEN 700 AND 760)
        OR (l_orderkey BETWEEN 1300 AND 1360)
     """,
+    family="range-band-joins", bench=True,
 )
 def q_range_scan(spark, sf_dir):
     li = t(spark, sf_dir, "lineitem")
@@ -358,6 +346,7 @@ def q_union_distinct(spark, sf_dir):
     )
     SELECT CAST(id AS BIGINT) AS id FROM reach
     """,
+    family="graph", bench=True,
 )
 def q_transitive_closure(spark, sf_dir):
     o = t(spark, sf_dir, "orders")
@@ -475,6 +464,7 @@ def q_bounds_agg(spark, sf_dir):
       FROM events
     ) WHERE rn = 1
     """,
+    family="update-diff", bench=True,
 )
 def q_last_version_wins(spark, sf_dir):
     ev = t(spark, sf_dir, "events")
@@ -500,6 +490,7 @@ def q_last_version_wins(spark, sf_dir):
       FROM customer
     ) WHERE rn <= 3
     """,
+    family="relational-core", bench=True,
 )
 def q_topk_per_group(spark, sf_dir):
     c = t(spark, sf_dir, "customer")
@@ -562,6 +553,7 @@ def q_typed_counts(spark, sf_dir):
       AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
     GROUP BY n_name
     """,
+    family="relational-core", bench=True,
 )
 def q_star_join_revenue(spark, sf_dir):
     li = t(spark, sf_dir, "lineitem")
@@ -596,6 +588,7 @@ def q_star_join_revenue(spark, sf_dir):
            COUNT(DISTINCT l_suppkey) AS n_supps
     FROM lineitem GROUP BY l_returnflag
     """,
+    family="relational-core", bench=True,
 )
 def q_count_distinct(spark, sf_dir):
     li = t(spark, sf_dir, "lineitem")
@@ -638,6 +631,7 @@ def q_pivot_event_types(spark, sf_dir):
            CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
     FROM events GROUP BY 1, 2
     """,
+    family="windows-sessions", bench=True,
 )
 def q_window_tumbling(spark, sf_dir):
     ev = t(spark, sf_dir, "events")
@@ -708,6 +702,7 @@ def q_window_sliding(spark, sf_dir):
     FROM p LEFT JOIN (SELECT event_id, view_id FROM cand WHERE rn = 1) c
       USING (event_id)
     """,
+    family="windows-sessions", bench=True,
 )
 def q_asof_join(spark, sf_dir):
     ev = t(spark, sf_dir, "events")
@@ -792,6 +787,7 @@ SESSION_GAP_US = 30 * 60 * 1_000_000
            CAST(SUM(n) AS BIGINT) AS n_events
     FROM per_sess GROUP BY user_id
     """,
+    family="windows-sessions", bench=True,
 )
 def q_sessionize(spark, sf_dir):
     ev = t(spark, sf_dir, "events")
@@ -835,6 +831,7 @@ BAND_SECONDS = 3600
       AND r.ts > l.ts
       AND epoch_us(r.ts) - epoch_us(l.ts) <= CAST({BAND_SECONDS} AS BIGINT) * 1000000
     """,
+    family="range-band-joins", bench=True,
 )
 def q_band_join(spark, sf_dir):
     """Batch band join (operators/asof.py:band_join): purchases within
@@ -890,6 +887,7 @@ def q_band_join(spark, sf_dir):
     SELECT "user", CAST(max(stage) AS INTEGER) AS stage
     FROM stages GROUP BY "user"
     """,
+    family="events-funnels", bench=True,
 )
 def q_event_funnel(spark, sf_dir):
     """Ordered conversion funnel view -> click -> purchase
@@ -952,22 +950,15 @@ def q_cohort_retention(spark, sf_dir):
 def q_grouping_sets(spark, sf_dir):
     """GROUPING SETS with grouping_id — the general form under rollup/
     cube (one Expand + one aggregate in Catalyst; DuckDB plans the
-    same shape). Declared via Spark SQL over a temp view: grouping
-    sets have no DataFrame-API spelling."""
+    same shape).  DataFrame.groupingSets keeps the query free of
+    session state: no temp view another concurrent query could
+    replace."""
     li = t(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("q_gs_lineitem")
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus)
-                    AS BIGINT) AS gid,
-               count(*) AS n,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-                 AS sum_qty
-        FROM q_gs_lineitem
-        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus),
-                                (l_returnflag), ())
-        """
+    rf, ls = F.col("l_returnflag"), F.col("l_linestatus")
+    return li.groupingSets([[rf, ls], [rf], []], rf, ls).agg(
+        (F.grouping(rf) * 2 + F.grouping(ls)).cast("bigint").alias("gid"),
+        F.count("*").alias("n"),
+        F.sum(money("l_quantity")).cast("double").alias("sum_qty"),
     )
 
 

@@ -16,19 +16,15 @@ double products). Parity rules beyond queries.py:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .operators import (
     dedup, multimodal, profile, retrieval, sample, similarity, skew, text,
 )
 from .queries import t
+from .registry import defq, live
 from .streaming import stateful, watermark_ops
-
-SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE_SQL: dict[str, str] = {}
 
 EMB_DIM = 64
 N_HASHES = 8
@@ -36,14 +32,16 @@ N_BANDS = 4
 SHINGLE_K = 2
 
 
-def defq(name: str, oracle: str | None = None):
-    def wrap(fn):
-        SPARK_QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return wrap
+def __getattr__(name: str):
+    """Live views under the names external harnesses read
+    (perfbench/workloads.py: queries_data.SPARK_QUERIES[q],
+    queries_data.ORACLE_SQL[q])."""
+    if name == "SPARK_QUERIES":
+        return {n: q.build for n, q in live().items()}
+    if name == "ORACLE_SQL":
+        return {n: q.sql() for n, q in live().items()
+                if q.oracle is not None}
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
 
 
 # --- text analysis ---------------------------------------------------------
@@ -58,6 +56,7 @@ def defq(name: str, oracle: str | None = None):
                 w -> list_contains({text.STOPWORDS!r}, w))) AS INTEGER) AS n_stopwords
     FROM documents
     """,
+    family="retrieval-ranking", bench=True,
 )
 def q_doc_token_stats(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
@@ -276,6 +275,7 @@ def _dup_cluster_ctes() -> str:
     WITH {_minhash_pairs_ctes()}
     SELECT id_a, id_b FROM pairs
     """,
+    family="dedup-minhash", bench=True,
 )
 def q_minhash_lsh_pairs(spark, sf_dir):
     return dedup.minhash_lsh_pairs(
@@ -301,6 +301,7 @@ def _lsh_pairs(spark, sf_dir):
     WITH RECURSIVE {_dup_cluster_ctes()}
     SELECT id, cluster_id FROM clus ORDER BY id
     """,
+    family="dedup-minhash", bench=True,
 )
 def q_dup_clusters(spark, sf_dir):
     """Connected components over the LSH candidate pairs: the step that
@@ -362,6 +363,7 @@ def q_boilerplate_ngrams(spark, sf_dir):
     FROM documents
     ORDER BY doc_id
     """,
+    family="profiling-quality", bench=True,
 )
 def q_quality_buckets(spark, sf_dir):
     """Curriculum bucketing (exact-quantile contract form; the 100 TB
@@ -379,6 +381,7 @@ def q_quality_buckets(spark, sf_dir):
         "documents", ["doc_id", "text", "lang", "source", "n_chars"]
     )
     + " ORDER BY \"column\"",
+    family="profiling-quality", bench=True,
 )
 def q_profile_documents(spark, sf_dir):
     """Per-column ingest-gate profile (nulls/cardinality/range) in ONE
@@ -386,7 +389,8 @@ def q_profile_documents(spark, sf_dir):
     return profile.profile(t(spark, sf_dir, "documents")).orderBy("column")
 
 
-@defq("q_bm25_topk", retrieval.bm25_oracle_sql(["hash", "join", "spark"], k=10))
+@defq("q_bm25_topk", retrieval.bm25_oracle_sql(["hash", "join", "spark"], k=10),
+      family="retrieval-ranking", bench=True)
 def q_bm25_topk(spark, sf_dir):
     """BM25 lexical top-k over the corpus — zero-shuffle scoring scan +
     broadcast stats row + TakeOrdered top-k (operators/retrieval.py)."""
@@ -414,6 +418,7 @@ def q_bm25_topk(spark, sf_dir):
     WHERE 20 * len(list_intersect(a.sh, b.sh))
           >= len(list_distinct(list_concat(a.sh, b.sh)))
     """,
+    family="dedup-minhash", bench=True,
 )
 def q_ngram_jaccard(spark, sf_dir):
     """Exact bigram-Jaccard pairs within (lang, source) blocks via the
@@ -504,6 +509,7 @@ def _dot_sql(a: str, b: str) -> str:
     )
     SELECT query_id, neighbor_id, knn_rank FROM ranked WHERE knn_rank <= 5
     """,
+    family="embeddings-ann", bench=True,
 )
 def q_embedding_topk(spark, sf_dir):
     emb = t(spark, sf_dir, "embeddings")
@@ -550,6 +556,7 @@ def _bucket_sql(vec: str) -> str:
     )
     SELECT query_id, neighbor_id, knn_rank FROM ranked WHERE knn_rank <= 3
     """,
+    family="embeddings-ann", bench=True,
 )
 def q_embedding_ann_bucketed(spark, sf_dir):
     emb = t(spark, sf_dir, "embeddings")
@@ -1117,6 +1124,7 @@ _MIX_QUOTAS = {"src0": 10, "src1": 5, "src3": 7}
                       WHEN 'src2' THEN 1000
                       ELSE 0 END
     """,
+    family="sampling-curation", bench=True,
 )
 def q_stratified_sample(spark, sf_dir):
     """Deterministic per-source rate sampling (operators/sample.py):
@@ -1198,9 +1206,7 @@ def q_domain_mix(spark, sf_dir):
 _CONTAM_K = 3
 
 
-@defq(
-    "q_contamination",
-    f"""
+_CONTAM_SQL = f"""
     WITH ws AS (
       SELECT doc_id, string_split(text, ' ') AS w FROM documents
     ), sh AS (
@@ -1218,8 +1224,10 @@ _CONTAM_K = 3
     WHERE i.doc_id <> b.bench_id
     GROUP BY i.doc_id, b.bench_id
     HAVING COUNT(*) >= 2
-    """,
-)
+    """
+
+
+@defq("q_contamination", _CONTAM_SQL, family="sampling-curation", bench=True)
 def q_contamination(spark, sf_dir):
     """Benchmark decontamination: corpus docs sharing >= 2 word
     3-grams with any "benchmark" doc (doc_id % 97 == 0 stands in for
@@ -1303,6 +1311,7 @@ def q_embedding_quantize(spark, sf_dir):
     )
     SELECT query_id, neighbor_id, knn_rank FROM ranked WHERE knn_rank <= 5
     """,
+    family="embeddings-ann", bench=True,
 )
 def q_quantized_ann(spark, sf_dir):
     """Approximate inner-product top-k over int8 codes (similarity.py:
@@ -1337,6 +1346,7 @@ def q_quantized_ann(spark, sf_dir):
     )
     SELECT vec_id, cid AS cluster FROM r WHERE rn = 1
     """,
+    family="embeddings-ann", bench=True,
 )
 def q_kmeans_assign(spark, sf_dir):
     """One distributed Lloyd assignment step (similarity.py:
@@ -1661,7 +1671,8 @@ def _semantic_dedup_oracle_sql(n_centroids: int = 16, threshold: str = "0.9e0") 
     """
 
 
-@defq("q_semantic_dedup", _semantic_dedup_oracle_sql())
+@defq("q_semantic_dedup", _semantic_dedup_oracle_sql(),
+      family="dedup-minhash", bench=True)
 def q_semantic_dedup(spark, sf_dir):
     """SemDeDup (similarity.semantic_dedup, arXiv:2303.09540): coarse
     k-means clusters, one representative per cluster, drop members with
@@ -1742,6 +1753,7 @@ def q_importance_weights(spark, sf_dir):
       FROM weights
     ) WHERE rnk <= 100
     """,
+    family="sampling-curation", bench=True,
 )
 def q_importance_resample(spark, sf_dir):
     """The DSIR selection step: keep the 100 raw docs whose hashed
@@ -1911,6 +1923,7 @@ def q_pq_encode(spark, sf_dir):
       FROM pscored
     ) WHERE knn_rank <= 5
     """,
+    family="embeddings-ann", bench=True,
 )
 def q_pq_topk(spark, sf_dir):
     """Asymmetric-distance (ADC) top-k over PQ codes (similarity.py:
@@ -1980,6 +1993,7 @@ def q_dup_ngram_stats(spark, sf_dir):
     FROM sws w LEFT JOIN sper p USING (doc_id)
     WHERE len(w.w) >= {SPAN_K}
     """,
+    family="profiling-quality", bench=True,
 )
 def q_doc_dup_spans(spark, sf_dir):
     """Per-document duplicated-span coverage (dedup.py: doc_dup_spans):
@@ -2017,6 +2031,7 @@ def q_doc_dup_spans(spark, sf_dir):
             AND (n_stop >= 2)) AS keep
     FROM gm
     """,
+    family="sampling-curation", bench=True,
 )
 def q_gopher_rules(spark, sf_dir):
     """Gopher quality gates (text.py: gopher_flags, arXiv:2112.11446):
@@ -2081,6 +2096,7 @@ def q_gopher_rules(spark, sf_dir):
     FROM ce e LEFT JOIN cper p USING (doc_id)
     WHERE COALESCE(p.n_dup, 0) * 5 <= len(e.w) - {SPAN_K - 1}
     """,
+    family="sampling-curation", bench=True,
 )
 def q_curation_pipeline(spark, sf_dir):
     """End-to-end curation: Gopher gates -> exact-dedup survivor
@@ -2198,10 +2214,7 @@ def q_ivfpq_topk(spark, sf_dir):
     )
 
 
-@defq(
-    "q_contamination_bloom",
-    ORACLE_SQL["q_contamination"],
-)
+@defq("q_contamination_bloom", _CONTAM_SQL)
 def q_contamination_bloom(spark, sf_dir):
     """Bloom-pruned decontamination (dedup.py:
     contamination_pairs_bloom): a deterministic Bloom filter over the
@@ -2608,6 +2621,7 @@ def _cms_bucket_sql(j: str, item: str) -> str:
            END AS est_distinct
     FROM kagg
     """,
+    family="sketches", bench=True,
 )
 def q_kmv_distinct(spark, sf_dir):
     """KMV distinct-count sketch over word 3-gram shingles
@@ -2644,6 +2658,7 @@ def q_kmv_distinct(spark, sf_dir):
     FROM cprobe p LEFT JOIN csk s ON p.j = s.j AND p.bucket = s.bucket
     GROUP BY p.item
     """,
+    family="sketches", bench=True,
 )
 def q_cms_heavy_hitters(spark, sf_dir):
     """Count-Min point-frequency estimates for a probe vocabulary
@@ -2694,6 +2709,7 @@ _LR_STOP = text.STOPWORDS
                 + {_LR_W[5]} * n_digit) > 0 AS keep
     FROM lrf
     """,
+    family="model-scoring", bench=True,
 )
 def q_quality_logreg(spark, sf_dir):
     """Quality-classifier inference (operators/text.py:quality_logreg):
@@ -2791,6 +2807,7 @@ _BIGRAM_CTE = """
     WITH {_BIGRAM_CTE}
     SELECT doc_id AS id, n_bigrams, nll_micro FROM bgnll
     """,
+    family="model-scoring", bench=True,
 )
 def q_bigram_perplexity(spark, sf_dir):
     """Bigram-LM quality scores (importance.py:bigram_nll_scores): the
@@ -2911,6 +2928,7 @@ def q_stream_topk(spark, sf_dir):
     SELECT a, b, CAST(levenshtein(a, b) AS INTEGER) AS dist
     FROM fcand WHERE levenshtein(a, b) <= 2
     """,
+    family="dedup-minhash", bench=True,
 )
 def q_fuzzy_token_pairs(spark, sf_dir):
     """Edit-distance similarity self-join over the corpus vocabulary
@@ -3035,34 +3053,10 @@ def q_incremental_dedup(spark, sf_dir):
     )
 
 
-# --- staging area for new contract queries ---------------------------------
-# A never-green entry sorts to the head of priority_order() and evicts
-# an aged row from the driver's 50-slot window, so when the window must
-# stay stable for a round, new queries register here via defq_pending
-# instead of defq; tests/test_oracle_parity.py runs them through the
-# SAME strict gate, and the following round promotes them with the
-# SPARK_QUERIES.update(...) merge at the bottom of this file.
-# Round-5 staged nine queries (quantile sketch family, exact quantiles,
-# k-means training, CMS-pruned frequent items, BPE pair counts,
-# streaming sketch); round 6 promoted all nine — see the merge below.
-PENDING_SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-PENDING_ORACLE_SQL: dict[str, str] = {}
-
-
-def defq_pending(name: str, oracle: str | None = None):
-    def wrap(fn):
-        PENDING_SPARK_QUERIES[name] = fn
-        if oracle is not None:
-            PENDING_ORACLE_SQL[name] = oracle
-        return fn
-
-    return wrap
-
-
 _QSK_QUANTILES = [(50, 100), (90, 100), (99, 100), (999, 1000)]
 
 
-@defq_pending(
+@defq(
     "q_quantile_sketch",
     f"""
     WITH b AS (
@@ -3099,6 +3093,7 @@ _QSK_QUANTILES = [(50, 100), (90, 100), (99, 100), (999, 1000)]
            END AS BIGINT) AS hi
     FROM hit
     """,
+    family="sketch-quantiles", bench=True,
 )
 def q_quantile_sketch(spark, sf_dir):
     """Integer-log quantile sketch (operators/sketch.py, the
@@ -3119,7 +3114,7 @@ _KMT_K = 8
 _KMT_DIM = 64
 
 
-@defq_pending(
+@defq(
     "q_kmeans_train",
     f"""
     WITH qv AS (
@@ -3163,6 +3158,7 @@ _KMT_DIM = 64
     SELECT vec_id, CAST(cid AS BIGINT) AS cluster FROM a2
     QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) = 1
     """,
+    family="kmeans-training", bench=True,
 )
 def q_kmeans_train(spark, sf_dir):
     """Fully-distributed Lloyd k-means training
@@ -3181,7 +3177,7 @@ def q_kmeans_train(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_quantile_by_group",
     f"""
     WITH b AS (
@@ -3220,6 +3216,7 @@ def q_kmeans_train(spark, sf_dir):
            END AS BIGINT) AS hi
     FROM hit
     """,
+    family="sketch-quantiles",
 )
 def q_quantile_by_group(spark, sf_dir):
     """Per-source length quantiles from the grouped integer-log sketch
@@ -3236,7 +3233,7 @@ def q_quantile_by_group(spark, sf_dir):
     return sketch.quantile_sketch_query_by(sk, [(50, 100), (99, 100)])
 
 
-@defq_pending(
+@defq(
     "q_exact_quantiles",
     f"""
     WITH ranked AS (
@@ -3253,6 +3250,7 @@ def q_quantile_by_group(spark, sf_dir):
     FROM probes p JOIN ranked r
       ON r.rn = (p.q_num * r.n + p.q_den - 1) // p.q_den
     """,
+    family="sketch-quantiles", bench=True,
 )
 def q_exact_quantiles(spark, sf_dir):
     """Sketch-guided EXACT quantiles (operators/sketch.py:
@@ -3268,7 +3266,7 @@ def q_exact_quantiles(spark, sf_dir):
     return sketch.exact_quantiles(d, F.col("n_chars"), _QSK_QUANTILES)
 
 
-@defq_pending(
+@defq(
     "q_bpe_pair_counts",
     """
     WITH w AS (
@@ -3298,6 +3296,7 @@ def q_exact_quantiles(spark, sf_dir):
     FROM agg
     QUALIFY row_number() OVER (ORDER BY total DESC, a, b) <= 20
     """,
+    family="tokenizer-vocab", bench=True,
 )
 def q_bpe_pair_counts(spark, sf_dir):
     """The first BPE training iteration's aggregation (operators/
@@ -3322,7 +3321,7 @@ def q_bpe_pair_counts(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_stream_quantile_sketch",
     """
     SELECT CAST(epoch(time_bucket(INTERVAL '5 minutes', ts)) AS BIGINT) AS win_start,
@@ -3358,7 +3357,7 @@ def q_stream_quantile_sketch(spark, sf_dir):
 _QSM_QUANTILES = [(25, 100), (75, 100)]
 
 
-@defq_pending(
+@defq(
     "q_quantile_sketch_merge",
     f"""
     WITH b AS (
@@ -3395,6 +3394,7 @@ _QSM_QUANTILES = [(25, 100), (75, 100)]
            END AS BIGINT) AS hi
     FROM hit
     """,
+    family="sketch-quantiles",
 )
 def q_quantile_sketch_merge(spark, sf_dir):
     """Sketch merge algebra THROUGH the driver gate: three per-shard
@@ -3416,7 +3416,7 @@ def q_quantile_sketch_merge(spark, sf_dir):
     return sketch.quantile_sketch_query(merged, _QSM_QUANTILES)
 
 
-@defq_pending(
+@defq(
     "q_exact_quantiles_by",
     """
     WITH ranked AS (
@@ -3435,6 +3435,7 @@ def q_quantile_sketch_merge(spark, sf_dir):
     FROM probes p JOIN ranked r
       ON r.rn = (p.q_num * r.n + p.q_den - 1) // p.q_den
     """,
+    family="sketch-quantiles", bench=True,
 )
 def q_exact_quantiles_by(spark, sf_dir):
     """Per-source EXACT length quantiles (operators/sketch.py:
@@ -3455,13 +3456,14 @@ def q_exact_quantiles_by(spark, sf_dir):
 _FREQ_MIN = 200
 
 
-@defq_pending(
+@defq(
     "q_frequent_tokens",
     f"""
     SELECT item, CAST(COUNT(*) AS BIGINT) AS cnt
     FROM (SELECT unnest(string_split(text, ' ')) AS item FROM documents)
     GROUP BY item HAVING COUNT(*) >= {_FREQ_MIN}
     """,
+    family="tokenizer-vocab", bench=True,
 )
 def q_frequent_tokens(spark, sf_dir):
     """Exact frequent tokens with the Count-Min prune
@@ -3477,23 +3479,6 @@ def q_frequent_tokens(spark, sf_dir):
     toks = d.select(F.explode(F.split(F.col("text"), " ")).alias("tok"))
     return sketch.exact_frequent_items(toks, F.col("tok"), _FREQ_MIN)
 
-
-# --- round-6 promotion ------------------------------------------------------
-# Merge the round-5 staging set into the live registry (VERDICT r05 ask
-# #1). The nine queries are never-green in the committed CORRECTNESS
-# evidence, so priority_order() serves them in the first window slots,
-# followed by the 40 r03-aged rows + the oldest r04 row — exactly 50.
-SPARK_QUERIES.update(PENDING_SPARK_QUERIES)
-ORACLE_SQL.update(PENDING_ORACLE_SQL)
-PENDING_SPARK_QUERIES = {}
-PENDING_ORACLE_SQL = {}
-
-
-# --- round-6 staged queries (promote in round 7) ----------------------------
-# defq_pending now appends to the fresh (empty) pending dicts above, so
-# anything registered below stays OUT of the live registry until next
-# round's promotion merge — the round-6 driver window must stay exactly
-# the 9 promoted + 40 r03-aged + 1 r04 rows (VERDICT r05 ask #2).
 
 _BPE_N_MERGES = 8
 
@@ -3581,7 +3566,8 @@ _BPE_MERGES_ORACLE = (
 )
 
 
-@defq_pending("q_bpe_merges", _BPE_MERGES_ORACLE)
+@defq("q_bpe_merges", _BPE_MERGES_ORACLE,
+      family="tokenizer-vocab", bench=True)
 def q_bpe_merges(spark, sf_dir):
     """The BPE training LOOP behind the driver gate (VERDICT r05 ask
     #3): 8 full merge iterations of operators/bpe.py:bpe_train over the
@@ -3599,9 +3585,6 @@ def q_bpe_merges(spark, sf_dir):
     merges = bpe.bpe_train(words, n_merges=_BPE_N_MERGES)
     rows = [(i + 1, a, b) for i, (a, b) in enumerate(merges)]
     return spark.createDataFrame(rows, "rank int, a string, b string")
-
-
-# --- round-6 session additions (stay PENDING until the r07 promotion) -------
 
 
 def _qsk_bucket_sql(col: str) -> str:
@@ -3633,7 +3616,7 @@ def _qsk_bounds_sql(bucket: str) -> tuple[str, str]:
 _DRIFT_LO, _DRIFT_HI = _qsk_bounds_sql("bucket")
 
 
-@defq_pending(
+@defq(
     "q_dist_drift",
     f"""
     WITH ob AS (SELECT {_qsk_bucket_sql('n_chars')} AS bucket
@@ -3650,6 +3633,7 @@ _DRIFT_LO, _DRIFT_HI = _qsk_bounds_sql("bucket")
           FROM oc FULL OUTER JOIN nc ON oc.bucket = nc.bucket)
     SELECT bucket, old_n, new_n, {_DRIFT_LO} AS lo, {_DRIFT_HI} AS hi FROM j
     """,
+    family="drift-outliers", bench=True,
 )
 def q_dist_drift(spark, sf_dir):
     """Distribution-drift census (operators/sketch.py:drift_census)
@@ -3673,7 +3657,7 @@ def q_dist_drift(spark, sf_dir):
 _MAD_SCALE = (2, 1)
 
 
-@defq_pending(
+@defq(
     "q_mad_outliers",
     f"""
     WITH v AS (SELECT doc_id, CAST(n_chars AS BIGINT) AS v
@@ -3690,6 +3674,7 @@ _MAD_SCALE = (2, 1)
     SELECT doc_id, v, abs_dev, med, mad FROM dev, madv
     WHERE abs_dev * {_MAD_SCALE[1]} > {_MAD_SCALE[0]} * mad
     """,
+    family="drift-outliers", bench=True,
 )
 def q_mad_outliers(spark, sf_dir):
     """Robust outlier detection (operators/sketch.py:mad_outliers):
@@ -3708,7 +3693,7 @@ def q_mad_outliers(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_winsorized_stats",
     """
     WITH v AS (SELECT lang, CAST(n_chars AS BIGINT) AS v
@@ -3727,6 +3712,7 @@ def q_mad_outliers(spark, sf_dir):
            CAST(lo AS BIGINT) AS clip_lo, CAST(hi AS BIGINT) AS clip_hi
     FROM v, loq, hiq GROUP BY lang, lo, hi
     """,
+    family="drift-outliers",
 )
 def q_winsorized_stats(spark, sf_dir):
     """Winsorized per-language length stats
@@ -3747,11 +3733,12 @@ _RRF_TERMS = ["hash", "join", "spark"]
 _RRF_QID = 7
 
 
-@defq_pending(
+@defq(
     "q_rrf_fusion",
     retrieval.rrf_oracle_sql(
         _RRF_TERMS, query_vec_id=_RRF_QID, dim=EMB_DIM, k=10, k_each=20
     ),
+    family="retrieval-ranking", bench=True,
 )
 def q_rrf_fusion(spark, sf_dir):
     """Hybrid lexical+vector retrieval fused by reciprocal rank
@@ -3782,7 +3769,7 @@ _HTML_DOC_SQL = (
 )
 
 
-@defq_pending(
+@defq(
     "q_html_strip",
     f"""
     SELECT doc_id,
@@ -3791,6 +3778,7 @@ _HTML_DOC_SQL = (
              AS n_chars_clean
     FROM documents
     """,
+    family="text-normalize", bench=True,
 )
 def q_html_strip(spark, sf_dir):
     """HTML -> visible text extraction (operators/text.py:html_strip),
@@ -3816,7 +3804,7 @@ def q_html_strip(spark, sf_dir):
 _BUDGET_TOKENS = 1500
 
 
-@defq_pending(
+@defq(
     "q_token_budget",
     f"""
     WITH v AS (
@@ -3833,6 +3821,7 @@ _BUDGET_TOKENS = 1500
     SELECT doc_id, n_chars, n_tok, cum_w FROM c
     WHERE cum_w <= {_BUDGET_TOKENS}
     """,
+    family="sampling-curation", bench=True,
 )
 def q_token_budget(spark, sf_dir):
     """Greedy token-budget selection (operators/sample.py:
@@ -3853,7 +3842,7 @@ def q_token_budget(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_dist_drift_by",
     f"""
     WITH ob AS (SELECT lang AS key, {_qsk_bucket_sql('n_chars')} AS bucket
@@ -3873,6 +3862,7 @@ def q_token_budget(spark, sf_dir):
     SELECT key, bucket, old_n, new_n, {_DRIFT_LO} AS lo, {_DRIFT_HI} AS hi
     FROM j
     """,
+    family="drift-outliers", bench=True,
 )
 def q_dist_drift_by(spark, sf_dir):
     """Per-language drift census (operators/sketch.py:drift_census_by):
@@ -3938,13 +3928,14 @@ _NB_FINALS_SQL = """
                FROM scored s JOIN prior_micro p USING(label))"""
 
 
-@defq_pending(
+@defq(
     "q_nb_token_counts",
     f"""
     WITH {_NB_TOKS_SQL}
     SELECT label, b, CAST(COUNT(*) AS BIGINT) AS cnt
     FROM toks GROUP BY 1, 2
     """,
+    family="classifier",
 )
 def q_nb_token_counts(spark, sf_dir):
     """Naive Bayes TRAINING aggregate (operators/classify.py:
@@ -3958,7 +3949,7 @@ def q_nb_token_counts(spark, sf_dir):
     return classify.nb_token_counts(d, F.col("lang"), F.col("text"))
 
 
-@defq_pending(
+@defq(
     "q_nb_confusion",
     f"""
     WITH {_NB_TOKS_SQL},
@@ -3972,6 +3963,7 @@ def q_nb_token_counts(spark, sf_dir):
     SELECT t.label, p.pred, CAST(COUNT(*) AS BIGINT) AS n
     FROM truth t JOIN pred p USING(id) GROUP BY 1, 2
     """,
+    family="classifier", bench=True,
 )
 def q_nb_confusion(spark, sf_dir):
     """Distributed Naive Bayes TRAIN + CLASSIFY as one Catalyst plan
@@ -3990,7 +3982,7 @@ def q_nb_confusion(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_shard_manifest",
     f"""
     SELECT {sample.hash_bucket_sql('doc_id', 8)} AS shard,
@@ -4001,6 +3993,7 @@ def q_nb_confusion(spark, sf_dir):
                1, 15) AS BIGINT)) AS checksum
     FROM documents GROUP BY 1
     """,
+    family="shard-sink", bench=True,
 )
 def q_shard_manifest(spark, sf_dir):
     """Training-shard integrity manifest (operators/shards.py:
@@ -4026,7 +4019,7 @@ _SHINGLE_JOIN_EXPR = " || ' ' || ".join(
 )
 
 
-@defq_pending(
+@defq(
     "q_source_overlap",
     f"""
     WITH sh AS (
@@ -4058,6 +4051,7 @@ _SHINGLE_JOIN_EXPR = " || ' ' || ".join(
     FROM skel s
     LEFT JOIN common c ON c.src_a = s.src_a AND c.src_b = s.src_b
     """,
+    family="dedup-decontamination", bench=True,
 )
 def q_source_overlap(spark, sf_dir):
     """Dataset-provenance overlap matrix (operators/dedup.py:
@@ -4130,7 +4124,8 @@ _KC_ORACLE = (
 )
 
 
-@defq_pending("q_kcenter_select", _KC_ORACLE)
+@defq("q_kcenter_select", _KC_ORACLE,
+      family="embedding-similarity", bench=True)
 def q_kcenter_select(spark, sf_dir):
     """Greedy farthest-point k-center coreset selection
     (similarity.py:kcenter_select, Gonzalez 1985): five maximally
@@ -4155,7 +4150,7 @@ _NB_MARGIN_BUCKET_SQL = """
                  >> greatest(length(bin(mg)) - 1 - 4, 0)) END AS INTEGER)"""
 
 
-@defq_pending(
+@defq(
     "q_nb_reliability",
     f"""
     WITH {_NB_TOKS_SQL},
@@ -4177,6 +4172,7 @@ _NB_MARGIN_BUCKET_SQL = """
            CAST(SUM(ok) AS BIGINT) AS n_correct
     FROM lab GROUP BY 1
     """,
+    family="classifier", bench=True,
 )
 def q_nb_reliability(spark, sf_dir):
     """Classifier reliability table (operators/classify.py:
@@ -4199,7 +4195,7 @@ def q_nb_reliability(spark, sf_dir):
 _ED_K = 8
 
 
-@defq_pending(
+@defq(
     "q_embedding_drift",
     f"""
     WITH qv AS (
@@ -4226,6 +4222,7 @@ _ED_K = 8
            CAST(COUNT(*) FILTER (WHERE is_new) AS BIGINT) AS new_n
     FROM best GROUP BY 1
     """,
+    family="embedding-similarity", bench=True,
 )
 def q_embedding_drift(spark, sf_dir):
     """Vector-space drift census (similarity.py:embedding_drift_census):
@@ -4244,7 +4241,7 @@ def q_embedding_drift(spark, sf_dir):
     return similarity.embedding_drift_census(old, new, k=_ED_K)
 
 
-@defq_pending(
+@defq(
     "q_hard_negatives",
     f"""
     WITH q AS (SELECT vec_id AS query_id, embedding AS qv
@@ -4269,6 +4266,7 @@ def q_embedding_drift(spark, sf_dir):
     SELECT query_id, neighbor_id, sim, neg_rank
     FROM ranked WHERE neg_rank <= 5
     """,
+    family="embedding-similarity", bench=True,
 )
 def q_hard_negatives(spark, sf_dir):
     """Hard-negative mining (similarity.py:hard_negatives): per anchor
@@ -4285,7 +4283,7 @@ def q_hard_negatives(spark, sf_dir):
     ).withColumn("neg_rank", F.col("neg_rank").cast("int"))
 
 
-@defq_pending(
+@defq(
     "q_manifest_merge",
     f"""
     SELECT {sample.hash_bucket_sql('doc_id', 8)} AS shard,
@@ -4296,6 +4294,7 @@ def q_hard_negatives(spark, sf_dir):
                1, 15) AS BIGINT)) AS checksum
     FROM documents GROUP BY 1
     """,
+    family="shard-sink", bench=True,
 )
 def q_manifest_merge(spark, sf_dir):
     """The manifest MERGE ALGEBRA behind the driver gate: the corpus
@@ -4317,7 +4316,7 @@ def q_manifest_merge(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_event_spikes",
     """
     WITH c AS (
@@ -4338,6 +4337,7 @@ def q_manifest_merge(spark, sf_dir):
     FROM d JOIN mad m USING (event_type)
     WHERE d.dev > 3 * m.mad
     """,
+    family="events-funnels", bench=True,
 )
 def q_event_spikes(spark, sf_dir):
     """Event-rate anomaly alarm (operators/events.py:rate_spikes):
@@ -4354,7 +4354,7 @@ def q_event_spikes(spark, sf_dir):
     return events.rate_spikes(d)
 
 
-@defq_pending(
+@defq(
     "q_split_leakage",
     f"""
     WITH {_minhash_pairs_ctes()},
@@ -4370,6 +4370,7 @@ def q_event_spikes(spark, sf_dir):
     JOIN labels lb ON lb.doc_id = p.id_b
     WHERE la.split != lb.split
     """,
+    family="dedup-decontamination", bench=True,
 )
 def q_split_leakage(spark, sf_dir):
     """Train/eval leakage gate (operators/dedup.py:
@@ -4387,29 +4388,7 @@ def q_split_leakage(spark, sf_dir):
     )
 
 
-# --- round-7 promotion ------------------------------------------------------
-# Merge the round-6 staging set into the live registry (VERDICT r06 ask
-# #1). The nineteen queries are never-green in the committed
-# CORRECTNESS evidence, so priority_order() serves them in the first
-# window slots, followed by the 31 oldest r04-aged rows — exactly 50.
-# The registry holds at 168 for the round (ask #2): new round-7 work
-# stages through the fresh pending dicts below.
-SPARK_QUERIES.update(PENDING_SPARK_QUERIES)
-ORACLE_SQL.update(PENDING_ORACLE_SQL)
-PENDING_SPARK_QUERIES = {}
-PENDING_ORACLE_SQL = {}
-
-
-# --- round-7 staged queries (promote in round 8) ----------------------------
-# defq_pending now appends to the fresh (empty) pending dicts above, so
-# anything registered below stays OUT of the live registry until next
-# round's promotion merge — the round-7 driver window must stay exactly
-# the 19 promoted + 31 oldest-r04 rows (VERDICT r06 asks #1/#2), and
-# round 8 keeps the registry frozen so the remaining ~18 r04 rows
-# rotate through (ask #3).
-
-
-@defq_pending(
+@defq(
     "q_stream_drift",
     f"""
     WITH ref AS (SELECT {_qsk_bucket_sql('n_chars')} AS bucket
@@ -4432,6 +4411,7 @@ PENDING_ORACLE_SQL = {}
     SELECT epoch, bucket, old_n, new_n, {_DRIFT_LO} AS lo, {_DRIFT_HI} AS hi
     FROM j
     """,
+    family="drift-outliers", bench=True,
 )
 def q_stream_drift(spark, sf_dir):
     """The streaming drift monitor's READ PATH behind the strict gate
@@ -4503,7 +4483,7 @@ def _stream_drift_impl(spark, sf_dir, max_files_per_trigger):
     )
 
 
-@defq_pending(
+@defq(
     "q_hard_negatives_ivf",
     f"""
     WITH q AS (SELECT vec_id AS query_id, embedding AS qv
@@ -4528,6 +4508,7 @@ def _stream_drift_impl(spark, sf_dir, max_files_per_trigger):
     SELECT query_id, neighbor_id, sim, neg_rank
     FROM ranked WHERE neg_rank <= 5
     """,
+    family="embedding-similarity", bench=True,
 )
 def q_hard_negatives_ivf(spark, sf_dir):
     """The at-scale banded miner behind the gate (similarity.py:
@@ -4548,7 +4529,7 @@ def q_hard_negatives_ivf(spark, sf_dir):
     ).withColumn("neg_rank", F.col("neg_rank").cast("int"))
 
 
-@defq_pending(
+@defq(
     "q_embedding_gram",
     f"""
     WITH qv AS (
@@ -4568,6 +4549,7 @@ def q_hard_negatives_ivf(spark, sf_dir):
     FROM qv q CROSS JOIN grid g
     GROUP BY 1, 2
     """,
+    family="embedding-similarity", bench=True,
 )
 def q_embedding_gram(spark, sf_dir):
     """Exact second-moment matrix of the embedding corpus
@@ -4588,7 +4570,7 @@ def q_embedding_gram(spark, sf_dir):
     ).withColumn("gram", F.col("gram").cast("string"))
 
 
-@defq_pending(
+@defq(
     "q_softdedup_weights",
     f"""
     WITH RECURSIVE {_dup_cluster_ctes()},
@@ -4603,6 +4585,7 @@ def q_embedding_gram(spark, sf_dir):
            COALESCE(l.dup_count, CAST(1 AS BIGINT)) AS weight_den
     FROM documents d LEFT JOIN lab l ON l.id = d.doc_id
     """,
+    family="dedup-minhash", bench=True,
 )
 def q_softdedup_weights(spark, sf_dir):
     """Soft dedup (operators/dedup.py:soft_dedup_weights): every doc
@@ -4620,7 +4603,7 @@ def q_softdedup_weights(spark, sf_dir):
 _VG_BUCKETS = 10
 
 
-@defq_pending(
+@defq(
     "q_vocab_growth",
     f"""
     WITH mx AS (SELECT CAST(MAX(doc_id) AS BIGINT) AS m FROM documents),
@@ -4638,6 +4621,7 @@ _VG_BUCKETS = 10
            tt.total_tokens
     FROM tt LEFT JOIN nw ON nw.bucket = tt.bucket
     """,
+    family="tokenizer-vocab", bench=True,
 )
 def q_vocab_growth(spark, sf_dir):
     """Heaps-law vocabulary-growth census (operators/text.py:
@@ -4654,7 +4638,7 @@ def q_vocab_growth(spark, sf_dir):
     return text_ops.vocab_growth(d, "text", "doc_id", _VG_BUCKETS)
 
 
-@defq_pending(
+@defq(
     "q_ngram_novelty",
     f"""
     WITH corp AS (SELECT doc_id, text FROM documents WHERE doc_id % 4 != 0),
@@ -4690,6 +4674,7 @@ def q_vocab_growth(spark, sf_dir):
            COALESCE(t.n_novel, CAST(0 AS BIGINT)) AS n_novel
     FROM corp c LEFT JOIN cnt t ON t.doc_id = c.doc_id
     """,
+    family="dedup-decontamination", bench=True,
 )
 def q_ngram_novelty(spark, sf_dir):
     """Per-document n-gram novelty against a reference corpus
@@ -4712,7 +4697,7 @@ def q_ngram_novelty(spark, sf_dir):
 _RB_TOKENS = "CAST(len(string_split(text, ' ')) AS BIGINT)"
 
 
-@defq_pending(
+@defq(
     "q_rank_blend",
     f"""
     WITH v AS (
@@ -4735,6 +4720,7 @@ _RB_TOKENS = "CAST(len(string_split(text, ' ')) AS BIGINT)"
     JOIN c1 ON c1.bucket = b.b1
     JOIN c2 ON c2.bucket = b.b2
     """,
+    family="sampling-curation", bench=True,
 )
 def q_rank_blend(spark, sf_dir):
     """Rank-based score fusion WITHOUT a global sort (operators/
@@ -4762,7 +4748,7 @@ def q_rank_blend(spark, sf_dir):
 _BSB_BUDGETS = {"src0": 40_000, "src1": 25_000, "src2": 15_000}
 
 
-@defq_pending(
+@defq(
     "q_budget_by_domain",
     f"""
     WITH v AS (
@@ -4782,6 +4768,7 @@ _BSB_BUDGETS = {"src0": 40_000, "src1": 25_000, "src2": 15_000}
     SELECT doc_id, source, w AS n_chars, cum_w, budget
     FROM v WHERE cum_w <= budget
     """,
+    family="sampling-curation", bench=True,
 )
 def q_budget_by_domain(spark, sf_dir):
     """Per-domain token budgets (operators/sample.py:budget_select_by)
@@ -4805,7 +4792,7 @@ def q_budget_by_domain(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_modality_alignment",
     """
     WITH d AS (SELECT doc_id AS id FROM documents WHERE doc_id % 7 != 0),
@@ -4826,6 +4813,7 @@ def q_budget_by_domain(spark, sf_dir):
                     THEN 1 ELSE 0 END) AS BIGINT) AS n_dim_bad
     FROM j
     """,
+    family="profiling-quality", bench=True,
 )
 def q_modality_alignment(spark, sf_dir):
     """Cross-modality integrity gate (operators/profile.py:
@@ -4909,7 +4897,8 @@ def _profile_diff_oracle() -> str:
     """
 
 
-@defq_pending("q_profile_diff", _profile_diff_oracle())
+@defq("q_profile_diff", _profile_diff_oracle(),
+      family="profiling-quality", bench=True)
 def q_profile_diff(spark, sf_dir):
     """Epoch-over-epoch profile gate (operators/profile.py:
     profile_diff): diff the even-half profile against the odd-half
@@ -5019,9 +5008,10 @@ _IMAGE_BANDS_SQL = """
     ),"""
 
 
-@defq_pending(
+@defq(
     "q_image_near_dup",
     _IMAGE_BANDS_SQL + _banded_hamming_tail_sql("bands"),
+    family="multimodal-neardup", bench=True,
 )
 def q_image_near_dup(spark, sf_dir):
     """Image near-duplicate detection end-to-end through the REAL
@@ -5087,9 +5077,10 @@ _AUDIO_BANDS_SQL = """
     ),"""
 
 
-@defq_pending(
+@defq(
     "q_audio_fingerprint",
     _AUDIO_BANDS_SQL + _banded_hamming_tail_sql("bands"),
+    family="multimodal-neardup", bench=True,
 )
 def q_audio_fingerprint(spark, sf_dir):
     """Audio near-duplicate detection end-to-end through the REAL
@@ -5114,7 +5105,7 @@ def q_audio_fingerprint(spark, sf_dir):
     return multimodal.near_dup_by_bands(bands, max_hamming=3)
 
 
-@defq_pending(
+@defq(
     "q_distinctive_terms",
     """
     WITH tf AS (
@@ -5149,6 +5140,7 @@ def q_audio_fingerprint(spark, sf_dir):
       FROM sc
     ) WHERE rnk <= 10
     """,
+    family="profiling-quality", bench=True,
 )
 def q_distinctive_terms(spark, sf_dir):
     """Per-source distinctive vocabulary (text.distinctive_terms): the
@@ -5162,7 +5154,7 @@ def q_distinctive_terms(spark, sf_dir):
     return text.distinctive_terms(d, "source", "text", top_k=10)
 
 
-@defq_pending(
+@defq(
     "q_mix_plan",
     """
     WITH avail AS (
@@ -5190,6 +5182,7 @@ def q_distinctive_terms(spark, sf_dir):
              AS oversampled
     FROM w, tot
     """,
+    family="sampling-curation", bench=True,
 )
 def q_mix_plan(spark, sf_dir):
     """Training-mix planning (sample.mix_plan): reallocate the corpus'
@@ -5216,7 +5209,7 @@ def q_mix_plan(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_image_ingest_dedup",
     _IMAGE_BANDS_SQL
     + _banded_hamming_tail_sql(
@@ -5225,6 +5218,7 @@ def q_mix_plan(spark, sf_dir):
         a_name="new_id",
         b_name="ref_id",
     ),
+    family="multimodal-neardup", bench=True,
 )
 def q_image_ingest_dedup(spark, sf_dir):
     """Continuous-ingest image dedup against a PERSISTED band store
@@ -5257,7 +5251,7 @@ def q_image_ingest_dedup(spark, sf_dir):
     return multimodal.near_dup_against_store(new, ref, max_hamming=3)
 
 
-@defq_pending(
+@defq(
     "q_format_census",
     """
     WITH split AS (
@@ -5270,6 +5264,7 @@ def q_image_ingest_dedup(spark, sf_dir):
                 AS BIGINT) AS n_bytes
     FROM split GROUP BY format
     """,
+    family="multimodal-neardup", bench=True,
 )
 def q_format_census(spark, sf_dir):
     """Multimodal ingest triage (multimodal.sniff_format /
@@ -5290,7 +5285,7 @@ def q_format_census(spark, sf_dir):
     return multimodal.format_census(blobs)
 
 
-@defq_pending(
+@defq(
     "q_quota_fill",
     """
     WITH req AS (
@@ -5333,6 +5328,7 @@ def q_format_census(spark, sf_dir):
     LEFT JOIN av USING (source)
     LEFT JOIN ach USING (source)
     """,
+    family="sampling-curation", bench=True,
 )
 def q_quota_fill(spark, sf_dir):
     """Mixture post-flight (sample.quota_fill_report): requested vs
@@ -5348,7 +5344,7 @@ def q_quota_fill(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_audio_flac_stats",
     """
     WITH blocks AS (
@@ -5377,6 +5373,7 @@ def q_quota_fill(spark, sf_dir):
                 ELSE CAST(st.pk AS DOUBLE) / 128e0 END AS peak
     FROM documents d LEFT JOIN st USING (doc_id)
     """,
+    family="multimodal-neardup", bench=True,
 )
 def q_audio_flac_stats(spark, sf_dir):
     """The COMPRESSED-audio decode path behind the driver gate
@@ -5402,7 +5399,7 @@ def q_audio_flac_stats(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_audio_ingest_dedup",
     _AUDIO_BANDS_SQL
     + _banded_hamming_tail_sql(
@@ -5411,6 +5408,7 @@ def q_audio_flac_stats(spark, sf_dir):
         a_name="new_id",
         b_name="ref_id",
     ),
+    family="multimodal-neardup", bench=True,
 )
 def q_audio_ingest_dedup(spark, sf_dir):
     """Continuous-ingest AUDIO dedup against the persisted band store —
@@ -5461,11 +5459,12 @@ _IMG_CLUSTER_FINAL = """,
     """
 
 
-@defq_pending(
+@defq(
     "q_image_dup_clusters",
     "WITH RECURSIVE"
     + _IMAGE_BANDS_SQL[len("\n    WITH"):]
     + _banded_hamming_tail_sql("bands", final=_IMG_CLUSTER_FINAL),
+    family="multimodal-neardup", bench=True,
 )
 def q_image_dup_clusters(spark, sf_dir):
     """Image near-dup CLUSTER assignment: the banded Hamming pairs
@@ -5497,7 +5496,7 @@ _IMA_STEP_SQL = (
 )
 
 
-@defq_pending(
+@defq(
     "q_audio_g711_stats",
     """
     WITH blocks AS (
@@ -5538,6 +5537,7 @@ _IMA_STEP_SQL = (
                 ELSE CAST(st.pk AS DOUBLE) / 32768e0 END AS peak
     FROM documents d LEFT JOIN st USING (doc_id)
     """,
+    family="multimodal-neardup", bench=True,
 )
 def q_audio_g711_stats(spark, sf_dir):
     """The G.711 telephony-WAV decode paths behind the driver gate
@@ -5564,7 +5564,7 @@ def q_audio_g711_stats(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_audio_adpcm_stats",
     """
     WITH RECURSIVE
@@ -5629,6 +5629,7 @@ def q_audio_g711_stats(spark, sf_dir):
                 ELSE CAST(st.pk AS DOUBLE) / 32768e0 END AS peak
     FROM documents dd LEFT JOIN st ON st.doc_id = dd.doc_id
     """,
+    family="multimodal-neardup", bench=True,
 )
 def q_audio_adpcm_stats(spark, sf_dir):
     """The IMA/DVI ADPCM decode path behind the driver gate — the
@@ -5657,7 +5658,7 @@ def q_audio_adpcm_stats(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_image_jpeg_stats",
     """
     WITH prows AS (
@@ -5683,6 +5684,7 @@ def q_audio_adpcm_stats(spark, sf_dir):
            END AS mean_gray
     FROM documents d LEFT JOIN st USING (doc_id)
     """,
+    family="multimodal-neardup", bench=True,
 )
 def q_image_jpeg_stats(spark, sf_dir):
     """The JPEG decode machinery behind the driver gate for the first
@@ -5708,9 +5710,10 @@ def q_image_jpeg_stats(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_bm25_store",
     retrieval.bm25_oracle_sql(["hash", "join", "spark"], k=10),
+    family="retrieval-ranking", bench=True,
 )
 def q_bm25_store(spark, sf_dir):
     """BM25 from the PERSISTED index store (retrieval.save_bm25_index /
@@ -5732,7 +5735,7 @@ def q_bm25_store(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_kmv_distinct_by",
     f"""
     WITH kw AS (
@@ -5765,6 +5768,7 @@ def q_bm25_store(spark, sf_dir):
            END AS est_distinct
     FROM kagg
     """,
+    family="sketches", bench=True,
 )
 def q_kmv_distinct_by(spark, sf_dir):
     """Per-group KMV distinct-count sketch (sketch.kmv_distinct_
@@ -5784,7 +5788,7 @@ def q_kmv_distinct_by(spark, sf_dir):
     return sketch.kmv_distinct_estimate_by(sh, "source", F.col("s"), k=KMV_K)
 
 
-@defq_pending(
+@defq(
     "q_dedup_masks",
     f"""
     WITH mws AS (
@@ -5821,6 +5825,7 @@ def q_kmv_distinct_by(spark, sf_dir):
            CAST(MAX(pos) + {SPAN_K} AS INTEGER) AS end_tok
     FROM misl2 GROUP BY doc_id, isl
     """,
+    family="dedup-decontamination", bench=True,
 )
 def q_dedup_masks(spark, sf_dir):
     """Span-level dedup MASKS (dedup.dedup_span_masks): the merged
@@ -5836,7 +5841,7 @@ def q_dedup_masks(spark, sf_dir):
     return dedup.dedup_span_masks(d, "doc_id", "text", k=SPAN_K)
 
 
-@defq_pending(
+@defq(
     "q_bitext_mine",
     f"""
     WITH bs AS (
@@ -5887,6 +5892,7 @@ def q_dedup_masks(spark, sf_dir):
     SELECT src_id, tgt_id, sim6, margin FROM bbest
     WHERE m_s = 1 AND m_t = 1 AND margin > 1.0e0
     """,
+    family="embedding-similarity", bench=True,
 )
 def q_bitext_mine(spark, sf_dir):
     """Margin-based bitext mining (similarity.bitext_mine, Artetxe &
@@ -5918,7 +5924,7 @@ _G711_MAG_SQL = """
              END"""
 
 
-@defq_pending(
+@defq(
     "q_wav_segments_stats",
     f"""
     WITH vblocks AS (
@@ -5985,6 +5991,7 @@ _G711_MAG_SQL = """
     LEFT JOIN vagg ON vagg.doc_id = d.doc_id
     LEFT JOIN vlong ON vlong.doc_id = d.doc_id
     """,
+    family="multimodal-neardup", bench=True,
 )
 def q_wav_segments_stats(spark, sf_dir):
     """The voice-activity SEGMENTATION operator behind the driver gate
@@ -6019,7 +6026,7 @@ def q_wav_segments_stats(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_rollup_store",
     """
     WITH rr AS (
@@ -6037,6 +6044,7 @@ def q_wav_segments_stats(spark, sf_dir):
              AS avg_value
     FROM rr GROUP BY 1
     """,
+    family="rollup-store", bench=True,
 )
 def q_rollup_store(spark, sf_dir):
     """The hypertable-rollup STORE behind the driver gate
@@ -6067,7 +6075,7 @@ def q_rollup_store(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_hashed_features",
     """
     WITH tk AS (
@@ -6098,6 +6106,7 @@ def q_rollup_store(spark, sf_dir):
     SELECT agg.doc_id, agg.nnz, agg.l2sq, top.top_bucket
     FROM agg JOIN top USING (doc_id)
     """,
+    family="text-normalize", bench=True,
 )
 def q_hashed_features(spark, sf_dir):
     """The feature-hashing vectorizer behind the driver gate
@@ -6115,7 +6124,7 @@ def q_hashed_features(spark, sf_dir):
     return text.hashed_features_stats(d, dim=64)
 
 
-@defq_pending(
+@defq(
     "q_image_webp_stats",
     """
     WITH wrows AS (
@@ -6141,6 +6150,7 @@ def q_hashed_features(spark, sf_dir):
            END AS mean_gray
     FROM documents d LEFT JOIN wst USING (doc_id)
     """,
+    family="multimodal-neardup", bench=True,
 )
 def q_image_webp_stats(spark, sf_dir):
     """The WebP (VP8L lossless) decode machinery behind the driver
@@ -6175,7 +6185,7 @@ def q_image_webp_stats(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_stream_rollup",
     """
     WITH rr AS (
@@ -6196,6 +6206,7 @@ def q_image_webp_stats(spark, sf_dir):
              AS avg_value
     FROM rr GROUP BY bucket, event_type
     """,
+    family="rollup-store", bench=True,
 )
 def q_stream_rollup(spark, sf_dir):
     """The CONTINUOUS-INGEST rollup path behind the strict gate
@@ -6254,26 +6265,6 @@ def _stream_rollup_impl(spark, sf_dir, max_files_per_trigger):
         "max_cents",
         "avg_value",
     )
-
-
-# --- round-8 promotion ------------------------------------------------------
-# Merge the round-7 staging set into the live registry (VERDICT r07 ask
-# #1). The thirty-two queries are never-green in the committed
-# CORRECTNESS evidence, so priority_order() serves them in the first
-# window slots, followed by the 18 remaining r04-aged rows — exactly
-# 50. The registry holds at 200 for the round (ask #2): new round-8
-# work stages through the fresh pending dicts below.
-SPARK_QUERIES.update(PENDING_SPARK_QUERIES)
-ORACLE_SQL.update(PENDING_ORACLE_SQL)
-PENDING_SPARK_QUERIES = {}
-PENDING_ORACLE_SQL = {}
-
-
-# --- round-8 staged queries (promote in round 9) ----------------------------
-# defq_pending appends to the fresh (empty) pending dicts above, so
-# anything registered below stays OUT of the live registry until next
-# round's promotion merge — the round-8 driver window must stay exactly
-# the 32 promoted + 18 oldest-r04 rows (VERDICT r07 asks #1/#2).
 
 
 def _osmx_fixture_path() -> str:
@@ -6341,7 +6332,8 @@ SELECT * FROM (
 ) ORDER BY type"""
 
 
-@defq_pending("osm_osmx_roundtrip", oracle=_osmx_oracle())
+@defq("osm_osmx_roundtrip", oracle=_osmx_oracle,
+      family="osmx-migration", bench=True)
 def osm_osmx_roundtrip(spark, sf_dir):
     """The literal `.osmx` migration path (VERDICT r07 missing #1):
     the fixture dataset serialized into a real LMDB file our writer
@@ -6380,7 +6372,7 @@ def osm_osmx_roundtrip(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_join_size_estimate",
     f"""
     WITH cj AS (SELECT unnest(range({CMS_D})) AS j),
@@ -6410,6 +6402,7 @@ def osm_osmx_roundtrip(spark, sf_dir):
                  JOIN lineitem l ON o.o_orderkey = l.l_orderkey) AS BIGINT)
              AS exact_join_size
     """,
+    family="sketches", bench=True,
 )
 def q_join_size_estimate(spark, sf_dir):
     """Sketch-driven join planning (operators/sketch.py:cms_join_size,
@@ -6446,27 +6439,6 @@ def q_join_size_estimate(spark, sf_dir):
     )
 
 
-# --- round-9 promotion ------------------------------------------------------
-# Merge the round-8 staging set — osm_osmx_roundtrip (the .osmx LMDB
-# migration gate) and q_join_size_estimate (the CMS join-size gate) —
-# into the live registry (PERF.md "Round 9 must" #1). Both are
-# never-green in the committed CORRECTNESS evidence, so
-# priority_order() serves them in the first window slots, followed by
-# 48 of the 50 r05-aged rows. The registry holds at 202 for the round
-# (#3): new round-9 work stages through the fresh pending dicts below.
-SPARK_QUERIES.update(PENDING_SPARK_QUERIES)
-ORACLE_SQL.update(PENDING_ORACLE_SQL)
-PENDING_SPARK_QUERIES = {}
-PENDING_ORACLE_SQL = {}
-
-
-# --- round-9 staged queries (promote in round 10) ---------------------------
-# defq_pending appends to the fresh (empty) pending dicts above, so
-# anything registered below stays OUT of the live registry until next
-# round's promotion merge — the round-9 driver window must stay exactly
-# the 2 promoted + 48 oldest-r05 rows (PERF.md "Round 9 must" #2).
-
-
 # generated from SHINGLE_K so the oracle's shingle width can never
 # silently diverge from the engine's (it used to hardcode the bigram)
 _SHINGLE_CONCAT_SQL = " || ' ' || ".join(
@@ -6474,7 +6446,7 @@ _SHINGLE_CONCAT_SQL = " || ' ' || ".join(
 )
 
 
-@defq_pending(
+@defq(
     "q_prefix_filter_pairs",
     f"""
     WITH d AS (
@@ -6497,6 +6469,7 @@ _SHINGLE_CONCAT_SQL = " || ' ' || ".join(
     JOIN sz sb ON i.id_b = sb.doc_id
     WHERE 5 * i.n_inter >= 4 * (sa.n + sb.n - i.n_inter)
     """,
+    family="dedup-exact-similarity", bench=True,
 )
 def q_prefix_filter_pairs(spark, sf_dir):
     """EXACT global Jaccard >= 0.8 similarity join via prefix
@@ -6533,7 +6506,8 @@ _BPE_CENSUS_ORACLE = (
 )
 
 
-@defq_pending("q_bpe_token_census", _BPE_CENSUS_ORACLE)
+@defq("q_bpe_token_census", _BPE_CENSUS_ORACLE,
+      family="tokenizer-vocab", bench=True)
 def q_bpe_token_census(spark, sf_dir):
     """The tokenizer APPLY half behind a driver gate: train 8 merges
     (the q_bpe_merges loop), replay them over the vocabulary with the
@@ -6619,7 +6593,8 @@ _JOIN_ORDER_ORACLE = (
 )
 
 
-@defq_pending("q_join_order_advice", _JOIN_ORDER_ORACLE)
+@defq("q_join_order_advice", _JOIN_ORDER_ORACLE,
+      family="join-planning", bench=True)
 def q_join_order_advice(spark, sf_dir):
     """Sketch-driven join ORDERING for the customer-orders-lineitem
     chain (operators/sketch.py:chain_join_order): both adjacent join
@@ -6656,7 +6631,7 @@ def q_join_order_advice(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_audio_au_stats",
     """
     WITH blocks AS (
@@ -6690,6 +6665,7 @@ def q_join_order_advice(spark, sf_dir):
                 ELSE CAST(st.pk AS DOUBLE) / 32768e0 END AS peak
     FROM documents d LEFT JOIN st USING (doc_id)
     """,
+    family="multimodal-neardup", bench=True,
 )
 def q_audio_au_stats(spark, sf_dir):
     """The Sun AU (audio/basic) container behind the driver gate
@@ -6718,7 +6694,7 @@ def q_audio_au_stats(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_audio_mp3_census",
     """
     WITH fr AS (
@@ -6752,6 +6728,7 @@ def q_audio_au_stats(spark, sf_dir):
                 ELSE st.np END AS n_padded
     FROM documents d LEFT JOIN st USING (doc_id)
     """,
+    family="multimodal-neardup", bench=True,
 )
 def q_audio_mp3_census(spark, sf_dir):
     """The mp3 container behind a driver gate at the honest level the
@@ -6781,31 +6758,7 @@ def q_audio_mp3_census(spark, sf_dir):
     )
 
 
-# --- round-10 promotion -----------------------------------------------------
-# Merge the round-9 staging set — q_prefix_filter_pairs (exact PPJoin
-# similarity join), q_bpe_token_census (tokenizer apply census),
-# q_join_order_advice (CMS System-R join ordering), q_audio_au_stats
-# (Sun AU container) and q_audio_mp3_census (MPEG-1 L3 frame walk) —
-# into the live registry (PERF.md round-10 checklist #1). All five are
-# never-green in the committed CORRECTNESS evidence, so
-# priority_order() serves them in the first window slots, followed by
-# the 45 oldest aged rows (the 2 remaining r05 rows first, then r06).
-# The registry holds at 207 for the round: new round-10 work stages
-# through the fresh pending dicts below.
-SPARK_QUERIES.update(PENDING_SPARK_QUERIES)
-ORACLE_SQL.update(PENDING_ORACLE_SQL)
-PENDING_SPARK_QUERIES = {}
-PENDING_ORACLE_SQL = {}
-
-
-# --- round-10 staged queries (promote in round 11) --------------------------
-# defq_pending appends to the fresh (empty) pending dicts above, so
-# anything registered below stays OUT of the live registry until next
-# round's promotion merge — the round-10 driver window must stay
-# exactly the 5 promoted + 45 oldest rows.
-
-
-# --- round-10 staged gates: web-crawl ingestion surface ---------------------
+# --- web-crawl ingestion surface --------------------------------------------
 # The five operators a Common-Crawl-shaped pipeline runs FIRST, before
 # any operator the registry already gates: decompress the archive
 # (zstd), split + parse the container (WARC), canonicalize the key
@@ -6815,7 +6768,7 @@ PENDING_ORACLE_SQL = {}
 # census column recomputed by the oracle from the ORIGINAL text/hex.
 
 
-@defq_pending(
+@defq(
     "q_zstd_census",
     """
     SELECT doc_id AS item_id,
@@ -6832,6 +6785,7 @@ PENDING_ORACLE_SQL = {}
            END AS text_hash
     FROM documents
     """,
+    family="crawl-ingest", bench=True,
 )
 def q_zstd_census(spark, sf_dir):
     """zstd (RFC 8878) archive ingestion behind a driver gate: the
@@ -6862,7 +6816,7 @@ def q_zstd_census(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_warc_census",
     """
     WITH st AS (
@@ -6891,6 +6845,7 @@ def q_zstd_census(spark, sf_dir):
            END AS body_hash
     FROM documents d JOIN st USING (doc_id)
     """,
+    family="crawl-ingest", bench=True,
 )
 def q_warc_census(spark, sf_dir):
     """WARC (ISO 28500) web-archive ingestion behind a driver gate —
@@ -6922,7 +6877,7 @@ def q_warc_census(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_url_parse",
     """
     SELECT doc_id AS item_id,
@@ -6943,6 +6898,7 @@ def q_warc_census(spark, sf_dir):
                 AS INTEGER) AS n_params
     FROM documents
     """,
+    family="crawl-ingest", bench=True,
 )
 def q_url_parse(spark, sf_dir):
     """URL parsing + canonicalization behind a driver gate: one
@@ -6981,7 +6937,7 @@ def q_url_parse(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_charset_decode",
     """
     SELECT doc_id AS item_id,
@@ -7001,6 +6957,7 @@ def q_url_parse(spark, sf_dir):
            END AS text_hash
     FROM documents
     """,
+    family="crawl-ingest", bench=True,
 )
 def q_charset_decode(spark, sf_dir):
     """Charset sniffing + decoding behind a driver gate — the
@@ -7035,7 +6992,7 @@ def q_charset_decode(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_ogg_census",
     """
     WITH hx AS (
@@ -7086,6 +7043,7 @@ def q_charset_decode(spark, sf_dir):
                      ELSE a.total_granule END AS BIGINT) AS last_granule
     FROM documents d JOIN hx USING (doc_id) JOIN agg a USING (doc_id)
     """,
+    family="multimodal-neardup", bench=True,
 )
 def q_ogg_census(spark, sf_dir):
     """The Ogg container behind a driver gate — the mp3_frame_census
@@ -7123,7 +7081,7 @@ _ROBOTS_FIXTURE_TXT = (
 )
 
 
-@defq_pending(
+@defq(
     "q_robots_admit",
     """
     SELECT doc_id AS item_id,
@@ -7138,6 +7096,7 @@ _ROBOTS_FIXTURE_TXT = (
                      ELSE 0 END AS BIGINT) AS n_rules_matched
     FROM documents
     """,
+    family="crawl-ingest", bench=True,
 )
 def q_robots_admit(spark, sf_dir):
     """robots.txt URL admission behind a driver gate (operators/
@@ -7261,7 +7220,8 @@ WHERE levenshtein(a.name, b.name) <= 2
 """
 
 
-@defq_pending("q_record_linkage", _RECORD_LINKAGE_ORACLE)
+@defq("q_record_linkage", _RECORD_LINKAGE_ORACLE,
+      family="dedup-exact-similarity", bench=True)
 def q_record_linkage(spark, sf_dir):
     """Record linkage behind a driver gate (VERDICT r09 ask #6): the
     distinct part names spawn three deterministic spelling variants
@@ -7311,7 +7271,7 @@ def q_record_linkage(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_audio_mp3_decode",
     """
     WITH p AS (SELECT doc_id FROM documents WHERE doc_id % 7 != 0),
@@ -7392,6 +7352,7 @@ def q_record_linkage(spark, sf_dir):
                 ELSE st.sum_gg END AS sum_global_gain
     FROM documents d LEFT JOIN st ON d.doc_id = st.doc_id
     """,
+    family="multimodal-neardup", bench=True,
 )
 def q_audio_mp3_decode(spark, sf_dir):
     """MPEG-1 Layer III BITSTREAM DECODE behind a driver gate (VERDICT
@@ -7429,20 +7390,7 @@ def q_audio_mp3_decode(spark, sf_dir):
     )
 
 
-# --- round-11 promotion: the eight round-10 staged gates go live ------------
-# (six crawl-surface gates + record linkage + mp3 bitstream decode;
-# registry 207 -> 215).  New round-11 work stages through the fresh
-# pending dicts below, exactly like every prior promotion.
-SPARK_QUERIES.update(PENDING_SPARK_QUERIES)
-ORACLE_SQL.update(PENDING_ORACLE_SQL)
-PENDING_SPARK_QUERIES = {}
-PENDING_ORACLE_SQL = {}
-
-
-# --- round-11 session additions (stay PENDING until the r12 promotion) ------
-
-
-@defq_pending(
+@defq(
     "q_psl_domain",
     """
     WITH f AS (
@@ -7507,6 +7455,7 @@ PENDING_ORACLE_SQL = {}
            (m != 5) AS is_registrable
     FROM f
     """,
+    bench=True, pending=True,
 )
 def q_psl_domain(spark, sf_dir):
     """Public Suffix List registrable domains behind a driver gate
@@ -7566,7 +7515,7 @@ def q_psl_domain(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_audio_mp3_pcm",
     """
     WITH docs AS (
@@ -7654,6 +7603,7 @@ def q_psl_domain(spark, sf_dir):
                 ELSE st.chk END AS pcm_checksum
     FROM docs d LEFT JOIN st ON d.doc_id = st.doc_id
     """,
+    bench=True, pending=True,
 )
 def q_audio_mp3_pcm(spark, sf_dir):
     """MPEG-1 Layer III FULL-PCM decode behind a driver gate (VERDICT
@@ -7691,7 +7641,7 @@ def q_audio_mp3_pcm(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_vorbis_setup",
     """
     WITH h AS (
@@ -7837,6 +7787,7 @@ def q_audio_mp3_pcm(spark, sf_dir):
          JOIN fx USING (doc_id)
          JOIN rc USING (doc_id)
     """,
+    bench=True, pending=True,
 )
 def q_vorbis_setup(spark, sf_dir):
     """Vorbis setup-header codebook census behind a driver gate
@@ -7885,7 +7836,7 @@ def q_vorbis_setup(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_vorbis_pcm",
     """
     WITH docs AS (SELECT doc_id FROM documents),
@@ -7956,6 +7907,7 @@ def q_vorbis_setup(spark, sf_dir):
                 ELSE st.chk END AS pcm_checksum
     FROM docs d LEFT JOIN st ON d.doc_id = st.doc_id
     """,
+    bench=True, pending=True,
 )
 def q_vorbis_pcm(spark, sf_dir):
     """Vorbis FULL-PCM decode behind a driver gate — the second half
@@ -7995,7 +7947,7 @@ def q_vorbis_pcm(spark, sf_dir):
     )
 
 
-@defq_pending(
+@defq(
     "q_audio_aac_census",
     """
     WITH h AS (
@@ -8034,6 +7986,7 @@ def q_vorbis_pcm(spark, sf_dir):
            END AS payload_hash
     FROM p
     """,
+    bench=True, pending=True,
 )
 def q_audio_aac_census(spark, sf_dir):
     """AAC/ADTS container census behind a driver gate — the triage

@@ -17,6 +17,7 @@ of the oracled leaves.
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 
@@ -26,9 +27,8 @@ from pyspark.sql import functions as F
 from . import functions as fn
 from . import testing
 from .api import Dataset
+from .registry import defq
 from .spatial import Region
-
-SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
 FIXTURE_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                            ".fixtures", "osm_small")
@@ -42,15 +42,14 @@ def _dataset(spark: SparkSession) -> Dataset:
     return Dataset(spark, FIXTURE_DIR)
 
 
-def defq(name: str):
-    def wrap(fn_):
-        SPARK_QUERIES[name] = fn_
-        return fn_
-
-    return wrap
+def _oracle(name: str) -> Callable[[], str]:
+    """Lazy oracle: the pyarrow fixture copy it reads is built on the
+    first oracle_sql() call, never at import."""
+    return lambda: oracle_sql()[name]
 
 
-@defq("osm_extract_bbox")
+@defq("osm_extract_bbox", _oracle("osm_extract_bbox"),
+      family="osm-spatial", bench=True)
 def osm_extract_bbox(spark, sf_dir):
     """Flagship OSM pipeline: bbox extract -> typed ordered id output
     (extract.cpp:69-426; O3 ordering).  cache_ids: the output union
@@ -66,7 +65,7 @@ def osm_extract_bbox(spark, sf_dir):
     return out.orderBy("type_rank", "id")
 
 
-@defq("osm_extract_exact")
+@defq("osm_extract_exact", _oracle("osm_extract_exact"))
 def osm_extract_exact(spark, sf_dir):
     """Extract with the exact containment refinement (P5) the reference
     defines but never wires up (src/region.cpp:122-127)."""
@@ -74,7 +73,7 @@ def osm_extract_exact(spark, sf_dir):
     return res.node_ids.orderBy("id")
 
 
-@defq("osm_way_wkt")
+@defq("osm_way_wkt", _oracle("osm_way_wkt"))
 def osm_way_wkt(spark, sf_dir):
     """G6: WKT LineString assembly for every way in a bbox extract
     (examples/way_wkt.cpp:34-43)."""
@@ -82,7 +81,7 @@ def osm_way_wkt(spark, sf_dir):
     return fn.way_linestrings(res.ways, res.locations).orderBy("id")
 
 
-@defq("osm_lookup")
+@defq("osm_lookup", _oracle("osm_lookup"))
 def osm_lookup(spark, sf_dir):
     """S3: point lookup of one way (src/cmd.cpp:61-73)."""
     ds = _dataset(spark)
@@ -92,7 +91,7 @@ def osm_lookup(spark, sf_dir):
     )
 
 
-@defq("osm_stats")
+@defq("osm_stats", _oracle("osm_stats"))
 def osm_stats(spark, sf_dir):
     """S6: per-table cardinality report (src/cmd.cpp:96-109)."""
     ds = _dataset(spark)
@@ -105,7 +104,7 @@ def osm_stats(spark, sf_dir):
     return out.orderBy("rank")
 
 
-@defq("osm_augmented_diff")
+@defq("osm_augmented_diff", _oracle("osm_augmented_diff"))
 def osm_augmented_diff(spark, sf_dir):
     """U6 capstone: classify a deterministic OsmChange batch against the
     fixture snapshot and propagate node moves to parent ways/relations
@@ -479,7 +478,8 @@ def _augdiff_oracle_sql(d: str) -> str:
 RADIUS_PAIRS = 100000  # deg*1e7 units ~ 0.01 degrees ~ 1.1 km
 
 
-@defq("osm_radius_pairs")
+@defq("osm_radius_pairs", _oracle("osm_radius_pairs"),
+      family="osm-spatial", bench=True)
 def osm_radius_pairs(spark, sf_dir):
     """Proximity self-join over the fixture nodes (operators/
     spatial_join.py:radius_pairs): every pair within ~1.1 km planar
@@ -492,7 +492,7 @@ def osm_radius_pairs(spark, sf_dir):
     return radius_pairs(ds.table("locations"), RADIUS_PAIRS)
 
 
-@defq("osm_nearest_neighbors")
+@defq("osm_nearest_neighbors", _oracle("osm_nearest_neighbors"))
 def osm_nearest_neighbors(spark, sf_dir):
     """Radius-bounded kNN join over the fixture nodes (spatial_join.py:
     nearest_neighbors): each node's 3 closest neighbors within ~1.1 km,
@@ -503,7 +503,8 @@ def osm_nearest_neighbors(spark, sf_dir):
     return nearest_neighbors(ds.table("locations"), k=3, radius=RADIUS_PAIRS)
 
 
-@defq("osm_way_lengths")
+@defq("osm_way_lengths", _oracle("osm_way_lengths"),
+      family="osm-spatial", bench=True)
 def osm_way_lengths(spark, sf_dir):
     """Per-way planar polyline length (functions/__init__.py:
     way_lengths): segment lengths round to integer micro-units BEFORE
@@ -518,7 +519,8 @@ def osm_way_lengths(spark, sf_dir):
 TILE_ZOOM = 8
 
 
-@defq("osm_tile_counts")
+@defq("osm_tile_counts", _oracle("osm_tile_counts"),
+      family="osm-spatial", bench=True)
 def osm_tile_counts(spark, sf_dir):
     """Slippy-map tile census (spatial/cells.py:tile_xy): node count
     per web-mercator z8 tile — the partitioning key of every tile
@@ -536,7 +538,7 @@ def osm_tile_counts(spark, sf_dir):
     )
 
 
-@defq("osm_user_edit_stats")
+@defq("osm_user_edit_stats", _oracle("osm_user_edit_stats"))
 def osm_user_edit_stats(spark, sf_dir):
     """Contributor analytics (the OSMCha/taginfo-style workload): per
     user, how many tagged elements of each type they last touched and
@@ -578,6 +580,7 @@ ge AS (
 )"""
 
 
+@functools.cache
 def oracle_sql() -> dict[str, str]:
     d = _ensure_oracle_fixture()
     coord = f"{_fmt_coord_sql('lon')} || ' ' || {_fmt_coord_sql('lat')}"
@@ -924,7 +927,7 @@ JOIN pairs z ON z.wa = x.wa AND z.wb = y.wb""",
     }
 
 
-@defq("osm_relation_geojson")
+@defq("osm_relation_geojson", _oracle("osm_relation_geojson"))
 def osm_relation_geojson(spark, sf_dir):
     """G7: the recursive member descent behind relation GeoJSON
     assembly (python/examples/web_server.py:52-71), distributed as a
@@ -954,7 +957,7 @@ def osm_relation_geojson(spark, sf_dir):
     ).orderBy("id", "path")
 
 
-@defq("osm_tag_stats")
+@defq("osm_tag_stats", _oracle("osm_tag_stats"))
 def osm_tag_stats(spark, sf_dir):
     """Taginfo-style key/value census over all three element types
     (the reference's tag inventory workload; taginfo.openstreetmap.org
@@ -974,7 +977,8 @@ def osm_tag_stats(spark, sf_dir):
     )
 
 
-@defq("osm_way_areas")
+@defq("osm_way_areas", _oracle("osm_way_areas"),
+      family="osm-spatial", bench=True)
 def osm_way_areas(spark, sf_dir):
     """Closed-ring shoelace areas (functions/__init__.py:way_areas):
     exact signed integer 2A per closed way, translated to the first
@@ -984,7 +988,8 @@ def osm_way_areas(spark, sf_dir):
     return fn.way_areas(ds.table("ways"), ds.table("locations"))
 
 
-@defq("osm_way_intersections")
+@defq("osm_way_intersections", _oracle("osm_way_intersections"),
+      family="osm-spatial", bench=True)
 def osm_way_intersections(spark, sf_dir):
     """Topological way-intersection pairs over the node_way edge table
     (operators/spatial_join.py:way_intersections): the routing-graph
@@ -996,7 +1001,7 @@ def osm_way_intersections(spark, sf_dir):
     return way_intersections(ds.table("node_way"))
 
 
-@defq("osm_integrity_audit")
+@defq("osm_integrity_audit", _oracle("osm_integrity_audit"))
 def osm_integrity_audit(spark, sf_dir):
     """Referential-integrity census (operators/audit.py): dangling
     reference counts per category — the QA report the reference's
@@ -1023,7 +1028,7 @@ def _way_graph(spark) -> DataFrame:
     )
 
 
-@defq("osm_pagerank")
+@defq("osm_pagerank", _oracle("osm_pagerank"), family="graph", bench=True)
 def osm_pagerank(spark, sf_dir):
     """Integer-exact PageRank over the way-intersection graph
     (operators/graph.py:pagerank_micro, 2 damped power iterations):
@@ -1034,7 +1039,8 @@ def osm_pagerank(spark, sf_dir):
     return pagerank_micro(_way_graph(spark), iterations=2)
 
 
-@defq("osm_triangle_count")
+@defq("osm_triangle_count", _oracle("osm_triangle_count"),
+      family="graph", bench=True)
 def osm_triangle_count(spark, sf_dir):
     """Triangle census of the way-intersection graph (operators/
     graph.py:triangle_count): rank-oriented wedge join + closing

@@ -32,8 +32,6 @@ half the base ways plus brand-new ids.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -41,20 +39,8 @@ from . import schemas
 from .operators.diff import augmented_diff
 from .operators.update import apply_changes
 from .queries import t
+from .registry import defq
 from .spatial import cells
-
-SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLE_SQL: dict[str, str] = {}
-
-
-def defq(name: str, oracle: str | None = None):
-    def wrap(fn):
-        SPARK_QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE_SQL[name] = oracle
-        return fn
-
-    return wrap
 
 
 # --------------------------------------------------------------------------
@@ -419,6 +405,7 @@ def q_update_way_edges(spark, sf_dir):
     LEFT JOIN old_bbox ob ON o.id = ob.way_id
     LEFT JOIN new_bbox nb ON o.id = nb.way_id
     """,
+    family="update-diff", bench=True,
 )
 def q_augmented_diff_analog(spark, sf_dir):
     """The reference's most analytic pipeline, end-to-end on oracled

@@ -49,14 +49,12 @@ SUBSET = [
     "q_quality_logreg",        # broadcast model inference
     "q_cms_heavy_hitters",     # sketch fold
     "q_stratified_sample",     # scan-side sampling
-    # round-5 staged queries (PENDING registry; promoted in r06)
     "q_quantile_sketch",       # integer-log sketch fold
     "q_exact_quantiles",       # multi-pass histogram selection
     "q_kmeans_train",          # whole-corpus Lloyd iteration
     "q_bpe_pair_counts",       # vocabulary pair aggregation
     "q_exact_quantiles_by",    # joint multi-bracket selection
     "q_frequent_tokens",       # CMS-pruned exact counts
-    # round-6 staged queries (PENDING registry; promote in r07)
     "q_bpe_merges",            # 8 full BPE training iterations
     "q_dist_drift",            # two-snapshot sketch census
     "q_mad_outliers",          # two exact medians + scan-side flag
@@ -75,7 +73,6 @@ SUBSET = [
     "q_manifest_merge",        # 3-part manifest fold == union manifest
     "q_event_spikes",          # bounded median/MAD alarm over window counts
     "q_split_leakage",         # banded LSH pairs crossing the split
-    # round-7 staged queries (PENDING registry; promote in r08)
     "q_stream_drift",          # streaming read path -> bounded census
     "q_hard_negatives_ivf",    # banded miner through the IVF probe join
     "q_embedding_gram",        # dim^2/2 exact second moments, one scan
@@ -108,15 +105,12 @@ SUBSET = [
     "q_hashed_features",       # one-pass hashing-trick vectorizer folds
     "q_image_webp_stats",      # VP8L lossless decode in the Arrow seam
     "q_stream_rollup",         # streaming epoch sink + merge-on-read series
-    # round-8 staged queries (PENDING registry; promote in r09)
     "q_join_size_estimate",    # two CMS builds + bounded sketch join + exact join
-    # round-9 staged queries (PENDING registry; promote in r10)
     "q_prefix_filter_pairs",   # prefix-pruned inverted index + exact verify
     "q_bpe_token_census",      # train loop + JVM segmentation replay census
     "q_join_order_advice",     # two CMS estimate pairs + bounded sketch joins
     "q_audio_au_stats",        # Sun AU mu-law decode in the Arrow seam
     "q_audio_mp3_census",      # MPEG-1 L3 frame walk in the Arrow seam
-    # round-10 staged queries (PENDING registry; promote in r11)
     "q_zstd_census",           # zstd frame walk + ctypes decompress census
     "q_warc_census",           # gzip-member split + WARC/HTTP record parse
     "q_url_parse",             # RE2-safe URL grammar, scan-side codegen
@@ -125,7 +119,6 @@ SUBSET = [
     "q_robots_admit",          # rules seam + broadcast + longest-match max_by
     "q_record_linkage",        # soundex blocks + hot-cap anti-join + levenshtein
     "q_audio_mp3_decode",      # L3 bitstream decode (reservoir/huffman) seam
-    # round-11 staged queries (PENDING registry; promote in r12)
     "q_psl_domain",            # PSL longest-match, both execution paths
     "q_audio_mp3_pcm",         # full L3 PCM decode chain, analytic window
     "q_vorbis_setup",          # Ogg packet assembly + codebook parse seam
@@ -135,12 +128,10 @@ SUBSET = [
 
 
 def main() -> None:
-    from osmexpress_spark import queries as Q
-    from osmexpress_spark import queries_data as QD
+    from osmexpress_spark.registry import live, pending
 
-    registry = {
-        **Q.SPARK_QUERIES, **QD.SPARK_QUERIES, **QD.PENDING_SPARK_QUERIES
-    }
+    # staged queries join the sweep before promotion
+    registry = {**live(), **pending()}
     subset = SUBSET
     if "--only" in sys.argv:  # sweep a few lines without the full run
         names = sys.argv[sys.argv.index("--only") + 1].split(",")
@@ -157,7 +148,7 @@ def main() -> None:
     # warmup at every sf so first-touch parquet footer reads don't
     # pollute the smallest scale's numbers
     for _, d in SF_DIRS:
-        Q.SPARK_QUERIES["q1_pricing_summary"](spark, d).write.format(
+        registry["q1_pricing_summary"](spark, d).write.format(
             "noop"
         ).mode("overwrite").save()
 

@@ -1,131 +1,46 @@
-"""bench.py registry hygiene (VERDICT r04 next-round #8).
+"""bench.py and query-registry hygiene.
 
-HEADLINE is a hand-maintained list; these guards make a rename or a
-registry refactor fail loudly instead of silently dropping perf
-coverage for a query family.
+Bench lines and families are fields of the query declarations
+(``registry.defq``), so renaming or dropping a query takes its bench
+line and family with it.  These guards keep every family benched,
+keep the summary line parseable, and keep a second registry from
+growing back beside ``osmexpress_spark/registry.py``.
 """
 
 from __future__ import annotations
 
+import json
+import os
+import re
+
 import bench
-from osmexpress_spark import queries as Q
-from osmexpress_spark import queries_data as QD
-from osmexpress_spark import queries_osm as QO
-from osmexpress_spark import queries_update as QU
+from osmexpress_spark.registry import live, pending
 
-
-def _registry():
-    return {
-        **Q.SPARK_QUERIES,
-        **QD.SPARK_QUERIES,
-        **QO.SPARK_QUERIES,
-        **QU.SPARK_QUERIES,
-    }
-
-
-def test_every_headline_name_is_registered():
-    reg = _registry()
-    missing = [n for n in bench.HEADLINE if n not in reg]
-    assert not missing, f"bench HEADLINE names not in registry: {missing}"
-    assert len(set(bench.HEADLINE)) == len(bench.HEADLINE), "duplicates"
-
-
-# Each SURVEY §2.9 family must keep >= 1 benched line. Members list the
-# registry queries belonging to the family (update when renaming);
-# the assertion is on the intersection with HEADLINE, so any ONE
-# surviving member keeps the family covered.
-FAMILIES = {
-    "relational-core": ["q1_pricing_summary", "q_star_join_revenue",
-                        "q_topk_per_group", "q_count_distinct"],
-    "windows-sessions": ["q_sessionize", "q_window_tumbling",
-                         "q_asof_join"],
-    "dedup-minhash": ["q_minhash_lsh_pairs", "q_ngram_jaccard",
-                      "q_dup_clusters", "q_semantic_dedup",
-                      "q_fuzzy_token_pairs", "q_softdedup_weights"],
-    "dedup-decontamination": ["q_source_overlap", "q_split_leakage",
-                              "q_ngram_novelty", "q_dedup_masks"],
-    "retrieval-ranking": ["q_bm25_topk", "q_doc_token_stats",
-                          "q_rrf_fusion", "q_bm25_store"],
-    "embeddings-ann": ["q_embedding_topk", "q_embedding_ann_bucketed",
-                       "q_quantized_ann", "q_pq_topk", "q_kmeans_assign"],
-    "embedding-similarity": ["q_kcenter_select", "q_embedding_drift",
-                             "q_hard_negatives", "q_hard_negatives_ivf",
-                             "q_embedding_gram", "q_bitext_mine"],
-    "sampling-curation": ["q_stratified_sample", "q_importance_resample",
-                          "q_gopher_rules", "q_curation_pipeline",
-                          "q_contamination", "q_token_budget",
-                          "q_rank_blend", "q_budget_by_domain",
-                          "q_mix_plan", "q_quota_fill"],
-    "drift-outliers": ["q_dist_drift", "q_dist_drift_by",
-                       "q_mad_outliers", "q_winsorized_stats",
-                       "q_stream_drift"],
-    "classifier": ["q_nb_token_counts", "q_nb_confusion",
-                   "q_nb_reliability"],
-    "shard-sink": ["q_shard_manifest", "q_manifest_merge"],
-    "text-normalize": ["q_html_strip", "q_hashed_features"],
-    "profiling-quality": ["q_profile_documents", "q_quality_buckets",
-                          "q_doc_dup_spans", "q_modality_alignment",
-                          "q_profile_diff", "q_distinctive_terms"],
-    "sketches": ["q_kmv_distinct", "q_cms_heavy_hitters",
-                 "q_kmv_distinct_by", "q_join_size_estimate"],
-    "sketch-quantiles": ["q_quantile_sketch", "q_quantile_by_group",
-                         "q_exact_quantiles", "q_exact_quantiles_by",
-                         "q_quantile_sketch_merge"],
-    "tokenizer-vocab": ["q_bpe_pair_counts", "q_frequent_tokens",
-                        "q_bpe_merges", "q_vocab_growth",
-                        "q_bpe_token_census"],
-    "kmeans-training": ["q_kmeans_train"],
-    "model-scoring": ["q_quality_logreg", "q_bigram_perplexity"],
-    "events-funnels": ["q_event_funnel", "q_event_spikes"],
-    "range-band-joins": ["q_band_join", "q_range_scan"],
-    "graph": ["osm_pagerank", "osm_triangle_count",
-              "q_transitive_closure"],
-    "osm-spatial": ["osm_extract_bbox", "osm_radius_pairs",
-                    "osm_way_lengths", "osm_tile_counts",
-                    "osm_way_areas", "osm_way_intersections"],
-    "update-diff": ["q_augmented_diff_analog", "q_last_version_wins"],
-    # round 8: the two families the round-7 staging set introduced
-    "multimodal-neardup": ["q_image_near_dup", "q_audio_fingerprint",
-                           "q_image_ingest_dedup", "q_format_census",
-                           "q_audio_flac_stats", "q_audio_ingest_dedup",
-                           "q_image_dup_clusters", "q_audio_g711_stats",
-                           "q_audio_adpcm_stats", "q_image_jpeg_stats",
-                           "q_wav_segments_stats", "q_image_webp_stats",
-                           "q_audio_au_stats", "q_audio_mp3_census",
-                           "q_ogg_census", "q_audio_mp3_decode"],
-    "rollup-store": ["q_rollup_store", "q_stream_rollup"],
-    # round 9: the family the round-8 staging set introduced
-    "osmx-migration": ["osm_osmx_roundtrip"],
-    # round 10: the promoted round-9 staging set joins existing
-    # families where one fits; the two genuinely new surfaces get rows
-    "dedup-exact-similarity": ["q_prefix_filter_pairs",
-                               "q_record_linkage"],
-    "join-planning": ["q_join_order_advice"],
-    # round 11: the promoted round-10 staging set — the crawl
-    # ingestion surface gets its own family; archive/container censuses
-    # and the mp3 bitstream decode join multimodal-neardup via the
-    # shared extract_features seam
-    "crawl-ingest": ["q_warc_census", "q_url_parse",
-                     "q_charset_decode", "q_robots_admit",
-                     "q_zstd_census"],
-}
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_every_family_keeps_a_bench_line():
-    reg = _registry()
-    head = set(bench.HEADLINE)
-    for fam, members in FAMILIES.items():
-        stale = [m for m in members if m not in reg]
-        assert not stale, f"family {fam} lists unregistered queries {stale}"
-        assert head & set(members), f"family {fam} has no bench line"
+    # each SURVEY §2.9 family keeps >= 1 benched line
+    queries = live().values()
+    families = {q.family for q in queries if q.family}
+    benched = {q.family for q in queries if q.bench}
+    assert families <= benched, (
+        f"families with no bench line: {sorted(families - benched)}"
+    )
+
+
+def test_family_map_covers_headline_registry_queries():
+    # every bench line names its family, so a promoted query must be
+    # classified before it is benched
+    unclassified = [n for n, q in live().items() if q.bench and not q.family]
+    assert not unclassified, f"bench lines missing a family: {unclassified}"
 
 
 def test_scaling_subset_is_registered():
     import scaling
 
-    # staged round-6 queries participate in the scaling sweep before
-    # promotion (scaling.py merges the pending registry)
-    reg = {**_registry(), **QD.PENDING_SPARK_QUERIES}
+    # staged queries join the scaling sweep before promotion
+    reg = {**live(), **pending()}
     missing = [n for n in scaling.SUBSET if n not in reg]
     assert not missing, f"scaling.py SUBSET names not in registry: {missing}"
     # all scaling lines read sf-scaled tables (no fixed-size OSM fixture
@@ -133,25 +48,51 @@ def test_scaling_subset_is_registered():
     assert not [n for n in scaling.SUBSET if n.startswith("osm_")]
 
 
-def test_family_map_covers_headline_registry_queries():
-    # every HEADLINE registry query belongs to some family, so a new
-    # bench line must be classified (keeps the map from rotting)
-    classified = {m for members in FAMILIES.values() for m in members}
-    reg = set(_registry())
-    unclassified = [n for n in bench.HEADLINE
-                    if n in reg and n not in classified]
-    assert not unclassified, f"bench lines missing a family: {unclassified}"
+def test_summary_line_fits_budget_and_skips_missing_names():
+    """The packed summary stays within its budget when the full map
+    does not fit, an ALWAYS_REPORT name missing from the timings is
+    skipped rather than crashing the run's last step, and the present
+    ones lead the line however fast they ran (grow-only entries)."""
+    timings = {f"q_line_{i:03d}": float(i) for i in range(300)}
+    timings["osm_extract_bbox"] = 0.01
+    assert set(bench.ALWAYS_REPORT) - set(timings)  # some are missing
+    fields = {"metric": "m", "value": 1.0, "queries": {}, "n_queries": 301}
+    assert len(json.dumps({**fields, "queries": timings})) > bench.SUMMARY_BUDGET
+
+    line = bench.summary_line(fields, timings)
+    assert len(line) <= bench.SUMMARY_BUDGET
+    parsed = json.loads(line)
+    assert list(parsed) == list(fields)
+    names = list(parsed["queries"])
+    assert names[0] == "osm_extract_bbox"
+    assert names[1:] == [f"q_line_{i:03d}" for i in range(299, 299 - len(names) + 1, -1)]
+    assert 1 < len(names) < len(timings)
 
 
-def test_pending_headline_names_are_staged():
-    """PENDING_HEADLINE (the bench lines round 6 adds at promotion)
-    must reference actual staged queries — a rename before promotion
-    would otherwise silently drop the planned perf coverage."""
-    import bench
+def _gated_sources():
+    for top in ("osmexpress_spark", "bench.py", "scaling.py", "tools"):
+        path = os.path.join(REPO, top)
+        if path.endswith(".py"):
+            yield path
+            continue
+        for dirpath, _, files in os.walk(path):
+            yield from (os.path.join(dirpath, f) for f in files if f.endswith(".py"))
 
-    missing = [
-        n for n in bench.PENDING_HEADLINE
-        if n not in QD.PENDING_SPARK_QUERIES
-    ]
-    assert not missing, f"PENDING_HEADLINE not in pending registry: {missing}"
-    assert len(set(bench.PENDING_HEADLINE)) == len(bench.PENDING_HEADLINE)
+
+def test_one_query_registry():
+    """registry.py holds the only defq and the only registry dict."""
+    home = os.path.join("osmexpress_spark", "registry.py")
+    stray_dict = re.compile(
+        r"^\s*(SPARK_QUERIES\s*(:\s*dict|=\s*\{)|PENDING_\w+\s*[:=])", re.M
+    )
+    defqs, strays = [], []
+    for path in _gated_sources():
+        rel = os.path.relpath(path, REPO)
+        with open(path) as f:
+            text = f.read()
+        defqs += [rel for _ in re.finditer(r"^\s*def defq\b", text, re.M)]
+        if rel != home:
+            strays += [f"{rel}: {m.group(0).strip()}"
+                       for m in stray_dict.finditer(text)]
+    assert defqs == [home]
+    assert not strays, strays

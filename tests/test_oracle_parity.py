@@ -12,15 +12,10 @@ import os
 import duckdb
 import pytest
 
-from osmexpress_spark import queries as Q
-from osmexpress_spark import queries_data as QD
-from osmexpress_spark import queries_osm as QO
-from osmexpress_spark import queries_update as QU
+from osmexpress_spark.registry import live, pending
 
-ALL_QUERIES = {
-    **Q.SPARK_QUERIES, **QD.SPARK_QUERIES, **QO.SPARK_QUERIES, **QU.SPARK_QUERIES
-}
-ALL_ORACLES = {**Q.ORACLE_SQL, **QD.ORACLE_SQL, **QO.oracle_sql(), **QU.ORACLE_SQL}
+LIVE, PENDING = live(), pending()
+ORACLED = sorted(n for n, q in LIVE.items() if q.oracle is not None)
 
 SF_DIR = os.environ.get("OSMX_TEST_SF_DIR", "/root/testdata/sf0.001")
 TABLES = [
@@ -57,7 +52,8 @@ def rowset(cols, rows):
 
 
 def strict_rowset(pdf):
-    """The driver's canonicalization (reverse-engineered in round 2):
+    """The correctness check's canonicalization (reverse-engineered
+    from its hash mismatches):
     both sides go through pandas, columns sorted by name, every cell
     stringified with str(), rows sorted.  Spark decimals survive as
     `Decimal('48.00')` while DuckDB's .df() converts DECIMAL columns
@@ -79,7 +75,7 @@ def _assert_driver_gate(spark, con, name, query_fn, oracle):
     never diverge between the two."""
     sdf = query_fn(spark, SF_DIR)
     # the driver's canonicalizer factorizes cells through pandas and
-    # CRASHES on list values (q_pq_encode, r03) and hash-fails on
+    # CRASHES on list values (q_pq_encode) and hash-fails on
     # decimals: every contract column must be a scalar non-decimal type
     hostile = [
         (c, dt)
@@ -104,30 +100,25 @@ def _assert_driver_gate(spark, con, name, query_fn, oracle):
 
 
 def test_all_queries_match_oracle_bulk(spark, con):
-    """r12 default-tier form of the parity gate (VERDICT r11 #9): the
-    SAME _assert_driver_gate over every declared + pending oracle, but
-    4 checks in flight (guide §2.6 — independent driver actions
-    overlap, so the per-query Spark job + DuckDB latency stops
-    serializing; ~660 s of sequential parametrized tests run in
-    ~3-4x less wall).  Each worker uses its own DuckDB cursor (the
-    shared connection is not thread-safe; cursors see the module
-    fixture's views).  The per-query parametrized forms below stay in
-    the FULL tier (--runslow) for granular failure reporting —
-    identical checks, identical canonicalization, shared helper."""
+    """Default-tier form of the parity gate: the SAME
+    _assert_driver_gate over every live and pending oracle, 4 checks
+    in flight (independent driver actions overlap, so the per-query
+    Spark job + DuckDB latency stops serializing).  Each worker uses
+    its own DuckDB cursor (the shared connection is not thread-safe;
+    cursors see the module fixture's views).  The per-query
+    parametrized forms below stay in the FULL tier (--runslow) for
+    granular failure reporting — identical checks, identical
+    canonicalization, shared helper."""
     from concurrent.futures import ThreadPoolExecutor
 
-    items = [
-        (name, ALL_QUERIES[name], ALL_ORACLES[name])
-        for name in sorted(ALL_ORACLES)
-    ] + [
-        (name, QD.PENDING_SPARK_QUERIES[name], QD.PENDING_ORACLE_SQL[name])
-        for name in sorted(QD.PENDING_ORACLE_SQL)
-    ]
+    # oracles resolve here, once, not racing in the workers
+    queries = [LIVE[n] for n in ORACLED] + [PENDING[n] for n in sorted(PENDING)]
+    items = [(q.name, q, q.sql()) for q in queries]
 
     def one(item):
-        name, fn, sql = item
+        name, query, sql = item
         try:
-            _assert_driver_gate(spark, con.cursor(), name, fn, sql)
+            _assert_driver_gate(spark, con.cursor(), name, query, sql)
             return None
         except Exception as ex:  # pragma: no cover - failure reporting
             return f"{name}: {ex}"
@@ -138,33 +129,33 @@ def test_all_queries_match_oracle_bulk(spark, con):
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("name", sorted(ALL_ORACLES))
+@pytest.mark.parametrize("name", ORACLED)
 def test_query_matches_oracle(spark, con, name):
-    _assert_driver_gate(spark, con, name, ALL_QUERIES[name], ALL_ORACLES[name])
+    query = LIVE[name]
+    _assert_driver_gate(spark, con, name, query, query.sql())
 
 
 @pytest.mark.slow
-@pytest.mark.parametrize("name", sorted(QD.PENDING_ORACLE_SQL))
+@pytest.mark.parametrize("name", sorted(PENDING))
 def test_pending_query_matches_oracle(spark, con, name):
-    """Round-6 staged contract queries (queries_data.py
-    PENDING_SPARK_QUERIES) run through the SAME strict gate as the
-    registered 140 — the round-5 registry must stay frozen so the
-    driver's evidence-age window re-greens the r02-aged rows, but the
-    staged queries are already proven before promotion."""
-    _assert_driver_gate(
-        spark, con, name,
-        QD.PENDING_SPARK_QUERIES[name], QD.PENDING_ORACLE_SQL[name],
-    )
+    """Staged queries (pending=True) run through the SAME strict gate
+    as the live ones: they are proven before promotion, while staying
+    out of the evidence-age window."""
+    query = PENDING[name]
+    _assert_driver_gate(spark, con, name, query, query.sql())
 
 
 def test_pending_not_registered():
-    """Staged queries must NOT leak into the live registry this round
-    (they would evict aged rows from the driver's 50-slot window)."""
-    assert not set(QD.PENDING_SPARK_QUERIES) & set(ALL_QUERIES)
+    """Staged queries must NOT leak into the live registry (they would
+    evict aged rows from the driver's 50-slot window)."""
+    import __spark_entry__ as e
+
+    assert not set(PENDING) & set(LIVE)
+    assert not set(PENDING) & set(e.queries())
 
 
 def test_simplify_ways_golden_fixture(spark):
-    """simplify_ways pinned at fixture scale (VERDICT r04 #6). Not a
+    """simplify_ways pinned at fixture scale. Not a
     DuckDB oracle: Visvalingam is an iterative smallest-area-first
     LOOP whose every removal changes the neighbors' areas — SQL has no
     ordered fixpoint to express it, so the pin is a golden checksum of

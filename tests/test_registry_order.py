@@ -21,6 +21,8 @@ import json
 import os
 import sys
 
+import pytest
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
@@ -154,3 +156,12 @@ def test_every_query_oracled_or_justified():
     assert not stale, f"rows-only allowlist references unknown queries: {stale}"
     double = ROWS_ONLY_JUSTIFIED & oracles
     assert not double, f"allowlisted queries now have oracles, remove: {double}"
+
+
+def test_defq_rejects_duplicate_name():
+    from osmexpress_spark.registry import defq, live
+
+    name = next(iter(live()))
+    with pytest.raises(ValueError, match=name):
+        defq(name)(lambda spark, sf_dir: None)
+    assert live()[name].name == name

@@ -321,7 +321,7 @@ def test_round10_staged_plans_stay_jvm_side(spark):
     """The four blob gates are single zero-shuffle Arrow seams up to
     their (bounded-output) aggregates; q_url_parse is pure whole-stage
     codegen — NO Python evaluation anywhere in its plan."""
-    from osmexpress_spark import queries_data as QD
+    from osmexpress_spark.registry import live
 
     SF_DIR = "/root/testdata/sf0.001"
 
@@ -331,7 +331,7 @@ def test_round10_staged_plans_stay_jvm_side(spark):
 
     for name in ("q_zstd_census", "q_warc_census", "q_charset_decode",
                  "q_ogg_census", "q_url_parse"):
-        plan = final_plan(QD.SPARK_QUERIES[name](spark, SF_DIR))
+        plan = final_plan(live()[name](spark, SF_DIR))
         assert "BatchEvalPython" not in plan, name
         assert "ArrowEvalPython" not in plan, name
         assert "CartesianProduct" not in plan, name
@@ -359,9 +359,9 @@ def test_round10_staged_plans_stay_jvm_side(spark):
 def test_mp3_decode_gate_plan(spark):
     """q_audio_mp3_decode: one zero-shuffle Arrow seam (synth +
     decode chained mapInPandas), no joins, no Exchange."""
-    from osmexpress_spark import queries_data as QD
+    from osmexpress_spark.registry import live
 
-    df = QD.SPARK_QUERIES["q_audio_mp3_decode"](
+    df = live()["q_audio_mp3_decode"](
         spark, "/root/testdata/sf0.001"
     )
     df.write.format("noop").mode("overwrite").save()
@@ -379,9 +379,9 @@ def test_record_linkage_gate_plan(spark):
     hot-block cap, bounded levenshtein) is one JVM equi-join tree —
     no Python stages, no cartesian, and the hot-block drop is the
     BROADCAST left-anti join the operator promises."""
-    from osmexpress_spark import queries_data as QD
+    from osmexpress_spark.registry import live
 
-    df = QD.SPARK_QUERIES["q_record_linkage"](
+    df = live()["q_record_linkage"](
         spark, "/root/testdata/sf0.001"
     )
     df.write.format("noop").mode("overwrite").save()

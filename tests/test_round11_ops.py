@@ -198,9 +198,9 @@ def test_psl_join_path_single_exchange_plan(spark):
 
 @pytest.mark.slow
 def test_psl_gate_plan(spark):
-    from osmexpress_spark import queries_data as QD
+    from osmexpress_spark.registry import pending
 
-    df = QD.PENDING_SPARK_QUERIES["q_psl_domain"](
+    df = pending()["q_psl_domain"](
         spark, "/root/testdata/sf0.001"
     )
     df.write.format("noop").mode("overwrite").save()
@@ -402,9 +402,9 @@ def test_decode_pcm_census_stats_and_refusal():
 def test_mp3_pcm_gate_plan(spark):
     """q_audio_mp3_pcm: one zero-shuffle Arrow seam (synth + decode
     chained mapInPandas), no joins, no Exchange."""
-    from osmexpress_spark import queries_data as QD
+    from osmexpress_spark.registry import pending
 
-    df = QD.PENDING_SPARK_QUERIES["q_audio_mp3_pcm"](
+    df = pending()["q_audio_mp3_pcm"](
         spark, "/root/testdata/sf0.001"
     )
     df.write.format("noop").mode("overwrite").save()
@@ -494,9 +494,9 @@ def test_ogg_packets_cross_page_continuation():
 
 
 def test_vorbis_gate_plan(spark):
-    from osmexpress_spark import queries_data as QD
+    from osmexpress_spark.registry import pending
 
-    df = QD.PENDING_SPARK_QUERIES["q_vorbis_setup"](
+    df = pending()["q_vorbis_setup"](
         spark, "/root/testdata/sf0.001"
     )
     df.write.format("noop").mode("overwrite").save()
@@ -615,9 +615,9 @@ def test_adts_census_damage_branches():
 
 
 def test_adts_gate_plan(spark):
-    from osmexpress_spark import queries_data as QD
+    from osmexpress_spark.registry import pending
 
-    df = QD.PENDING_SPARK_QUERIES["q_audio_aac_census"](
+    df = pending()["q_audio_aac_census"](
         spark, "/root/testdata/sf0.001"
     )
     df.write.format("noop").mode("overwrite").save()

@@ -474,17 +474,18 @@ def test_store_time_travel_rebuilds_partial_store(spark, tmp_path, monkeypatch):
     import shutil
 
     from osmexpress_spark import queries as Q
+    from osmexpress_spark.registry import live
 
     sf = "/root/testdata/sf0.001"
     root = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(Q.__file__))),
         ".fixtures", "store_tt_sf0.001",
     )
-    full = {tuple(r) for r in Q.SPARK_QUERIES["q_store_time_travel"](spark, sf).collect()}
+    full = {tuple(r) for r in live()["q_store_time_travel"](spark, sf).collect()}
     # simulate the crash: drop v1 and v2 manifests, keep v0
     for v in (1, 2):
         os.remove(os.path.join(root, "_versions", f"v{v:012d}.json"))
-    again = {tuple(r) for r in Q.SPARK_QUERIES["q_store_time_travel"](spark, sf).collect()}
+    again = {tuple(r) for r in live()["q_store_time_travel"](spark, sf).collect()}
     assert again == full
     shutil.rmtree(root)  # leave no half-state for other tests
 
@@ -666,6 +667,7 @@ def test_store_time_travel_rebuilds_in_place_on_stale_fingerprint(spark):
     import os
 
     from osmexpress_spark import queries as Q
+    from osmexpress_spark.registry import live
 
     sf = "/root/testdata/sf0.001"
     fixtures = os.path.join(
@@ -673,12 +675,12 @@ def test_store_time_travel_rebuilds_in_place_on_stale_fingerprint(spark):
         ".fixtures",
     )
     full = {tuple(r) for r in
-            Q.SPARK_QUERIES["q_store_time_travel"](spark, sf).collect()}
+            live()["q_store_time_travel"](spark, sf).collect()}
     root = os.path.join(fixtures, "store_tt_sf0.001")
     with open(os.path.join(root, "src.fp"), "w") as f:
         f.write("stale-from-last-round")
     again = {tuple(r) for r in
-             Q.SPARK_QUERIES["q_store_time_travel"](spark, sf).collect()}
+             live()["q_store_time_travel"](spark, sf).collect()}
     assert again == full
     with open(os.path.join(root, "src.fp")) as f:
         assert f.read().strip() == Q._tt_fingerprint(sf)  # refreshed

@@ -923,28 +923,19 @@ def test_exact_frequent_items_drops_null_items(spark):
 
 
 def test_pending_promotion_mechanics():
-    """Simulates the round-6 promotion (merge PENDING_* into the live
-    dicts) without mutating anything: every staged query would be
-    never-green and sort to the head of the evidence-age window, every
-    one has an oracle, and no name collides with the live registry."""
-    from osmexpress_spark import queries as Q
-    from osmexpress_spark import queries_data as QD
-    from osmexpress_spark import queries_osm as QO
-    from osmexpress_spark import queries_update as QU
-
-    live = {
-        **Q.SPARK_QUERIES, **QD.SPARK_QUERIES,
-        **QO.SPARK_QUERIES, **QU.SPARK_QUERIES,
-    }
-    assert not set(QD.PENDING_SPARK_QUERIES) & set(live)
-    assert set(QD.PENDING_ORACLE_SQL) == set(QD.PENDING_SPARK_QUERIES)
-    promoted = {**live, **QD.PENDING_SPARK_QUERIES}
-    assert len(promoted) == len(live) + len(QD.PENDING_SPARK_QUERIES)
-    # evidence files know nothing of the staged names -> never-green
+    """A staged query is promoted by dropping pending=True, so it must
+    already be gated (has an oracle), must sort to the head of the
+    evidence-age window on promotion (no green evidence yet) and must
+    not shadow a live query."""
     import __spark_entry__ as e
+    from osmexpress_spark.registry import live, pending
 
-    green = e._latest_green_round()
-    assert not set(QD.PENDING_SPARK_QUERIES) & set(green)
+    staged = pending()
+    assert staged
+    assert not [n for n, q in staged.items() if q.oracle is None]
+    promoted = {**live(), **staged}
+    assert len(promoted) == len(live()) + len(staged)
+    assert not set(staged) & set(e._latest_green_round())
 
 
 @pytest.mark.slow

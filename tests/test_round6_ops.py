@@ -81,13 +81,14 @@ def test_bpe_merges_query_matches_train_loop(spark):
     bpe_train's merge table (rank-aligned) — the query is a thin
     wrapper, so a drift between the two would be a registration bug."""
     from osmexpress_spark import queries_data as QD
+    from osmexpress_spark.registry import live
     from osmexpress_spark.operators import bpe
 
     sf = "/root/testdata/sf0.001"
     got = sorted(
         map(
             tuple,
-            QD.SPARK_QUERIES["q_bpe_merges"](spark, sf).collect(),
+            live()["q_bpe_merges"](spark, sf).collect(),
         )
     )
     d = spark.read.parquet(sf + "/documents.parquet")

@@ -394,11 +394,11 @@ def test_near_dup_join_is_equi_join_no_python_past_seam(spark):
 
 
 def test_distinctive_and_mix_queries_stay_jvm_side(spark):
-    from osmexpress_spark import queries_data as QD
+    from osmexpress_spark.registry import live
 
     for name in ("q_distinctive_terms", "q_mix_plan"):
         plan = _final_plan(
-            QD.SPARK_QUERIES[name](spark, "/root/testdata/sf0.001")
+            live()[name](spark, "/root/testdata/sf0.001")
         )
         assert "BatchEvalPython" not in plan, name
         assert "ArrowEvalPython" not in plan, name
@@ -406,10 +406,10 @@ def test_distinctive_and_mix_queries_stay_jvm_side(spark):
 
 
 def test_image_query_python_is_only_the_arrow_seam(spark):
-    from osmexpress_spark import queries_data as QD
+    from osmexpress_spark.registry import live
 
     plan = _final_plan(
-        QD.SPARK_QUERIES["q_image_near_dup"](
+        live()["q_image_near_dup"](
             spark, "/root/testdata/sf0.001"
         )
     )

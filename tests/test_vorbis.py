@@ -646,9 +646,9 @@ def test_vorbis_gate_torn_setup_refused(spark):
 
 
 def test_vorbis_pcm_gate_plan(spark):
-    from osmexpress_spark import queries_data as QD
+    from osmexpress_spark.registry import pending
 
-    df = QD.PENDING_SPARK_QUERIES["q_vorbis_pcm"](
+    df = pending()["q_vorbis_pcm"](
         spark, "/root/testdata/sf0.001"
     )
     df.write.format("noop").mode("overwrite").save()

@@ -62,14 +62,14 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from osmexpress_spark import get_spark
-    from osmexpress_spark import queries as Q
     from osmexpress_spark.operators import similarity
     from osmexpress_spark.queries_data import EMB_DIM, t as table
+    from osmexpress_spark.registry import live
 
     spark = get_spark(app_name="ab-gram", cpus=CPUS,
                       shuffle_partitions=int(CPUS))
     spark.sparkContext.setLogLevel("ERROR")
-    Q.SPARK_QUERIES["q_projection"](spark, SF_DIR).write.format(
+    live()["q_projection"](spark, SF_DIR).write.format(
         "noop").mode("overwrite").save()
     # warm the python workers so the A/B compares steady states
     spark.range(128).repartition(int(CPUS)).mapInPandas(

@@ -2,8 +2,9 @@
 """Capture .explain("formatted") for named registry queries.
 
 Usage: python tools/capture_plans.py <suffix> [name ...]
-Writes plans/r11/<name>_<suffix>.txt for each query (default: all
-HEADLINE queries).  suffix is e.g. "before" or "after".
+Writes plans/$PLANS_ROUND/<name>_<suffix>.txt for each query
+(default: every query declared bench=True).  suffix is e.g. "before"
+or "after".
 """
 
 from __future__ import annotations
@@ -25,21 +26,12 @@ def main() -> None:
     suffix = sys.argv[1]
     names = sys.argv[2:]
 
-    import bench
     from osmexpress_spark import get_spark
-    from osmexpress_spark import queries as Q
-    from osmexpress_spark import queries_data as QD
-    from osmexpress_spark import queries_osm as QO
-    from osmexpress_spark import queries_update as QU
+    from osmexpress_spark.registry import live
 
-    registry = {
-        **Q.SPARK_QUERIES,
-        **QD.SPARK_QUERIES,
-        **QO.SPARK_QUERIES,
-        **QU.SPARK_QUERIES,
-    }
+    registry = live()
     if not names:
-        names = [n for n in bench.HEADLINE if n in registry]
+        names = [n for n, q in registry.items() if q.bench]
 
     spark = get_spark(app_name="osmx-plans", cpus="32",
                       shuffle_partitions=32)

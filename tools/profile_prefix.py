@@ -21,14 +21,14 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from osmexpress_spark import get_spark
-    from osmexpress_spark import queries as Q
     from osmexpress_spark.operators.dedup import shingles
     from osmexpress_spark.queries_data import SHINGLE_K, t as table
+    from osmexpress_spark.registry import live
 
     spark = get_spark(app_name="profile-prefix", cpus=CPUS,
                       shuffle_partitions=int(CPUS))
     spark.sparkContext.setLogLevel("ERROR")
-    Q.SPARK_QUERIES["q_projection"](spark, SF_DIR).write.format(
+    live()["q_projection"](spark, SF_DIR).write.format(
         "noop").mode("overwrite").save()
 
     k, threshold = SHINGLE_K, 0.8

@@ -28,22 +28,14 @@ def main() -> None:
     names = args
 
     from osmexpress_spark import get_spark
-    from osmexpress_spark import queries as Q
-    from osmexpress_spark import queries_data as QD
-    from osmexpress_spark import queries_osm as QO
-    from osmexpress_spark import queries_update as QU
+    from osmexpress_spark.registry import live
 
-    registry = {
-        **Q.SPARK_QUERIES,
-        **QD.SPARK_QUERIES,
-        **QO.SPARK_QUERIES,
-        **QU.SPARK_QUERIES,
-    }
+    registry = live()
     spark = get_spark(app_name="osmx-timequery", cpus=CPUS,
                       shuffle_partitions=int(CPUS))
     spark.sparkContext.setLogLevel("ERROR")
     # warmup (bench.py does the same): session/codegen startup
-    Q.SPARK_QUERIES["q_projection"](spark, SF_DIR).write.format(
+    registry["q_projection"](spark, SF_DIR).write.format(
         "noop"
     ).mode("overwrite").save()
 
