@@ -1,12 +1,13 @@
-"""Lineage cuts for multiply-referenced frames (guide §2.4/§5).
+"""Lineage cuts for multiply-referenced frames (guide §2.4/§5), and
+the one narrow-scan fan-out rule (`fan_out`).
 
 Catalyst has no common-subtree elimination: a derived DataFrame
 referenced from two plan branches re-evaluates its entire lineage per
-reference.  The r11 fix was `localCheckpoint(eager=True)` at each such
-site.  This module centralizes that cut and adds the two things the
-r11 verdict flagged for cluster scale:
+reference.  The fix is `localCheckpoint(eager=True)` at each such
+site.  This module centralizes that cut and adds two things it needs
+at cluster scale:
 
-* **Failure story / size guard** (VERDICT r11 "what's wrong" #3):
+* **Failure story / size guard:**
   `localCheckpoint` stores blocks only on executors with no lineage to
   recompute from — an executor loss (or dynamic-allocation scale-in)
   fails the job.  Fine on a single node and for bounded proxy frames;
@@ -19,23 +20,23 @@ r11 verdict flagged for cluster scale:
   recomputation-by-lineage is exactly what the cut exists to avoid);
   cluster deployments should set a checkpoint dir.
 
-* **Block hygiene** (ADVICE r11): checkpointed blocks are freed only
+* **Block hygiene:** checkpointed blocks are freed only
   when the JVM object is garbage-collected.  Driver loops that chain
   one cut per round (kcenter) can call `release()` on the superseded
   round once its successor is materialized.  `release()` is
   best-effort: it must only be called when the frame's data can no
   longer be needed (a cut frame has no lineage to recompute from).
 
-Config (all scale-dependent knobs parameterised per the bench rules;
-local defaults keep the sf0.1 plans bit-identical to r11):
+Config (all scale-dependent knobs parameterised; the local defaults
+keep the sf0.1 plans bit-identical to plain `localCheckpoint` cuts):
 
 * ``spark.osmexpress_spark.cut.maxLocalBytes`` — estimated-size
   threshold above which a configured checkpoint dir is preferred over
   executor-local blocks.  Default ``8589934592`` (8 GiB).
 * ``spark.osmexpress_spark.cut.eager`` — set ``false`` to defer every
   cut's materialization to its first consuming action (the blocks
-  still guarantee one evaluation); default ``true`` keeps the measured
-  r11 behavior of materializing at operator-construction time.
+  still guarantee one evaluation); default ``true`` materializes at
+  operator-construction time.
 """
 
 from __future__ import annotations
@@ -79,13 +80,12 @@ def eager_enabled(spark) -> bool:
 def cut(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize ``df`` once and truncate its lineage.
 
-    Local (executor-block) checkpoint by default — the measured r11
-    shape.  Past the configured size threshold, prefer a reliable
-    ``checkpoint()`` when a checkpoint dir is configured, so an
-    executor loss at cluster scale degrades to a re-read instead of a
-    failed job.  At bench scale every operator frame sits far below
-    the default threshold and the plan is bit-identical to
-    ``localCheckpoint``.
+    Local (executor-block) checkpoint by default.  Past the configured
+    size threshold, prefer a reliable ``checkpoint()`` when a
+    checkpoint dir is configured, so an executor loss at cluster scale
+    degrades to a re-read instead of a failed job.  At bench scale
+    every operator frame sits far below the default threshold and the
+    plan is bit-identical to ``localCheckpoint``.
     """
     spark = df.sparkSession
     if _conf(spark, "spark.osmexpress_spark.cut.eager", "true") == "false":
@@ -106,18 +106,26 @@ def cut(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
-def narrow_scan(df: DataFrame, slots: int) -> bool:
-    """Whether ``df``'s physical scan yields fewer partitions than the
-    session has task slots (the r11 scale-adaptive fan-out condition).
-    The ``.rdd`` probe costs ~0.7 ms/call on classic sessions
-    (measured r12 — cheaper than an inputFiles()-based estimate at
-    ~2.4 ms), so it stays; Spark Connect sessions have no
-    ``DataFrame.rdd``, where this answers False and the scan shape is
-    kept (ADVICE r11 #4)."""
+def fan_out(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` across the session's task slots when its
+    physical scan yields fewer partitions than there are slots; else
+    return it unchanged.
+
+    The partitioning adapts to the input instead of being tuned for
+    either end: a small fixture is one parquet row group, so one scan
+    partition would run interpreted or Python per-row work serially,
+    while at corpus scale the file fan-out already exceeds the slots
+    and the scan-shaped plan is kept.  The ``.rdd`` probe costs about
+    0.7 ms per call on a classic session, less than an
+    ``inputFiles()``-based estimate (about 2.4 ms).  Spark Connect
+    sessions have no ``DataFrame.rdd`` or ``sparkContext``; there the
+    frame is returned unchanged and keeps its scan shape."""
     try:
-        return df.rdd.getNumPartitions() < slots
+        slots = df.sparkSession.sparkContext.defaultParallelism
+        narrow = df.rdd.getNumPartitions() < slots
     except Exception:
-        return False
+        return df
+    return df.repartition(slots) if narrow else df
 
 
 def release(df: DataFrame) -> None:

@@ -781,15 +781,9 @@ def exact_frequent_items(
     if min_count < 1:
         raise ValueError("min_count must be >= 1")
     sel = df.select(item.alias("item")).where(F.col("item").isNotNull())
-    # scale-adaptive fan-out (guide §2): both passes hash every item
-    # with interpreted md5 expressions, so a narrow upstream scan (the
-    # bench fixture is one parquet row group) would run them serially;
-    # round-robin the single item column across the session's slots
-    # when the scan is narrower.  At scale the condition is false and
-    # the two-pass scan shape is untouched.
-    slots = df.sparkSession.sparkContext.defaultParallelism
-    if lineage.narrow_scan(sel, slots):
-        sel = sel.repartition(slots)
+    # both passes hash every item with interpreted md5 expressions, so
+    # a narrow upstream scan is fanned out before them
+    sel = lineage.fan_out(sel)
     rows = cms_build(sel, F.col("item"), w, d).collect()
     counts = [[0] * w for _ in range(d)]
     for r in rows:

@@ -631,15 +631,9 @@ def hashed_features_stats(
     # hash+fold evaluations per row.  Naming it in a child projection
     # computes it once per row (CollapseProject keeps the split: the
     # alias is non-cheap and multiply referenced).  The scan is also
-    # fanned out when narrower than the session's slots — the bench
-    # fixture is one row group, which would run the interpreted fold
-    # serially; at scale the condition is false and the plan is
-    # unchanged.
-    spark = df.sparkSession
-    slots = spark.sparkContext.defaultParallelism
-    src = df.select(F.col(id_col), F.col(text_col))
-    if lineage.narrow_scan(src, slots):
-        src = src.repartition(slots)
+    # fanned out, so a one-row-group input does not run the
+    # interpreted fold serially.
+    src = lineage.fan_out(df.select(F.col(id_col), F.col(text_col)))
     base = src.select(F.col(id_col), iv.alias("_v"))
     pv = F.col("_v")
     return base.select(
@@ -724,7 +718,7 @@ def registrable_domain(url: Column) -> Column:
 
 
 # --------------------------------------------------------------------------
-# Public Suffix List registrable domains (VERDICT r10 next-round #3).
+# Public Suffix List registrable domains.
 #
 # The PSL algorithm (publicsuffix.org/list/): split the host into
 # dot-labels; a rule matches when its labels are a suffix of the

@@ -12,7 +12,7 @@ every future query):
   DOUBLE on both sides: the driver canonicalizes through pandas, where
   Spark decimals stay `Decimal('48.00')` but DuckDB's .df() converts
   to float64 `48.0`, so any trailing-zero decimal value hash-fails
-  (this was 6/6 of the round-1 hash mismatches);
+  (this caused every hash mismatch of the first oracle runs);
 - raw parquet doubles pass through untouched (identical bits on both
   engines); never re-cast them to decimal in the output;
 - averages stay double but are rounded to 4 decimals (fp error there
@@ -47,9 +47,9 @@ from .registry import defq
 def _ntz_to_ltz(df: DataFrame) -> DataFrame:
     """Normalize TIMESTAMP_NTZ columns to TIMESTAMP (LTZ).
 
-    The testdata writer's parquet annotation has varied across driver
-    rounds (round 1: UTC-adjusted; round 2: no-timezone, which Spark 4
-    infers as TIMESTAMP_NTZ). Functions like `unix_micros` and window()
+    The testdata writer's parquet annotation varies between
+    generations (UTC-adjusted, or no-timezone, which Spark 4 infers as
+    TIMESTAMP_NTZ). Functions like `unix_micros` and window()
     require LTZ, and the DuckDB oracles read the same files as naive
     timestamps — with the session pinned UTC the cast preserves the
     stored int64 exactly, so both annotations behave identically."""
@@ -67,29 +67,22 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return events(spark, sf_dir)
     df = _ntz_to_ltz(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
     if name == "embeddings":
-        # Scale-adaptive fan-out (guide §2): the embeddings fixture is
-        # ONE parquet row group -> one scan partition, and every
-        # vector operator's per-row work is interpreted higher-order
-        # array math (zip_with/aggregate folds do not enter
-        # whole-stage codegen) — serial on a 32-core session.  When
-        # the scan has fewer partitions than task slots, round-robin
-        # the rows across slots (a one-pass ~1 MB exchange here); at
-        # corpus scale the file fan-out exceeds defaultParallelism
-        # and this is a no-op, keeping the scan-shaped plans.
-        slots = spark.sparkContext.defaultParallelism
-        if lineage.narrow_scan(df, slots):
-            df = df.repartition(slots)
+        # Every vector operator's per-row work is interpreted
+        # higher-order array math (zip_with/aggregate folds do not
+        # enter whole-stage codegen), so the one-row-group fixture is
+        # fanned out to the session's slots (a one-pass ~1 MB exchange).
+        df = lineage.fan_out(df)
     return df
 
 
 def events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Round-1 events.parquet stored `ts` as parquet TIMESTAMP(NANOS),
+    """One testdata writer stores events.parquet `ts` as TIMESTAMP(NANOS),
     which the Spark vectorized reader rejects outright: read nanos as
     long (legacy conf, runtime-settable) and convert with integer
     arithmetic — `ts` values (~1.7e18 ns) overflow double precision, so
     the division must be integral; DuckDB truncates TIMESTAMP_NS to
-    micros, matching `ts DIV 1000` exactly. Round-2 testdata writes
-    micros without a timezone annotation instead — normalize the
+    micros, matching `ts DIV 1000` exactly. Another writer stores
+    micros without a timezone annotation — normalize the
     resulting TIMESTAMP_NTZ to LTZ (same int64, see _ntz_to_ltz)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/events.parquet")

@@ -18,6 +18,7 @@ from __future__ import annotations
 import datetime
 import os
 import random
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -272,6 +273,13 @@ def write_fixture_dataset(
         ).parquet(os.path.join(path, name))
 
 
+# Serializes the check-then-write below: concurrent queries in one
+# session (the 4-in-flight bulk parity test) would otherwise all see a
+# missing fixture and overwrite the same directories at once, leaving
+# part files of two writes behind.
+_FIXTURE_LOCK = threading.Lock()
+
+
 def ensure_fixture_dataset(
     spark: SparkSession,
     path: str,
@@ -279,12 +287,13 @@ def ensure_fixture_dataset(
     seed: int = 42,
     materialize_edges: bool = True,
 ) -> str:
-    if not os.path.exists(os.path.join(path, "relations", "_SUCCESS")):
-        write_fixture_dataset(spark, path, n_nodes=n_nodes, seed=seed)
-    if materialize_edges and not os.path.exists(
-        os.path.join(path, "node_way", "_SUCCESS")
-    ):
-        from .api import Dataset
+    with _FIXTURE_LOCK:
+        if not os.path.exists(os.path.join(path, "relations", "_SUCCESS")):
+            write_fixture_dataset(spark, path, n_nodes=n_nodes, seed=seed)
+        if materialize_edges and not os.path.exists(
+            os.path.join(path, "node_way", "_SUCCESS")
+        ):
+            from .api import Dataset
 
-        Dataset(spark, path).materialize_edges()
+            Dataset(spark, path).materialize_edges()
     return path

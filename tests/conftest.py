@@ -19,17 +19,21 @@ def spark():
 def assert_no_key_exchange(
     plan: str, ctx: str = "", allow_single_partition: bool = False
 ) -> None:
-    """r12 tightening of the r11 plan-gate relaxation (ADVICE r11):
-    the r11 scale-adaptive fan-out made gates allow round-robin
+    """Require that no key exchange appears in ``plan``.
+
+    The scale-adaptive fan-out (``lineage.fan_out``) adds round-robin
     repartitions, but asserting only "no Exchange hashpartitioning"
     would also wave through range/SinglePartition exchanges.  Strip
     the legitimate node kinds — round-robin fan-out, broadcast builds,
     and (only where a site declares a scalar statistic aggregate
     legitimate) SinglePartition — and require that NO other Exchange
-    remains.  Both explain("formatted") and executedPlan().toString()
-    casings are handled."""
+    remains.  A reused exchange prints as ``ReusedExchange [out],
+    <the referenced exchange>``: the token is stripped and the
+    referenced exchange is still checked.  Both explain("formatted")
+    and executedPlan().toString() casings are handled."""
     stripped = plan.replace("BroadcastExchange", "")
     for tok in (
+        "ReusedExchange",
         "Exchange roundrobinpartitioning",
         "Exchange RoundRobinPartitioning",
     ):
@@ -47,14 +51,12 @@ def pytest_addoption(parser):
 
 
 def pytest_collection_modifyitems(config, items):
-    """r12 fast tier (VERDICT r11 #9): the full suite outgrew the
-    driver's verification window (~44 min; VERIFY_r11 stopped at 53%
-    with zero failures).  Long sweeps carry @pytest.mark.slow and are
-    skipped by DEFAULT so `python -m pytest tests/ -x -q` — the
-    driver's exact command — finishes inside the window; the full
-    tier runs with --runslow or OSMX_RUN_SLOW=1 (CI/round-end
-    validation).  Oracle parity at sf0.001 and the plan-assertion
-    suites stay in the smoke tier by design."""
+    """Fast default tier: the full suite takes about 44 minutes, so
+    long sweeps carry @pytest.mark.slow and are skipped by DEFAULT,
+    letting `python -m pytest tests/ -x -q` finish in a short
+    verification window; the full tier runs with --runslow or
+    OSMX_RUN_SLOW=1.  Oracle parity at sf0.001 and the
+    plan-assertion suites stay in the default tier by design."""
     if config.getoption("--runslow") or os.environ.get("OSMX_RUN_SLOW"):
         return
     skip = pytest.mark.skip(

@@ -9,6 +9,7 @@ growing back beside ``osmexpress_spark/registry.py``.
 
 from __future__ import annotations
 
+import ast
 import json
 import os
 import re
@@ -95,4 +96,44 @@ def test_one_query_registry():
             strays += [f"{rel}: {m.group(0).strip()}"
                        for m in stray_dict.finditer(text)]
     assert defqs == [home]
+    assert not strays, strays
+
+
+def _calls_by_function(tree):
+    """(top-level function name or None, Call node) for every call."""
+    for node in tree.body:
+        name = node.name if isinstance(node, ast.FunctionDef) else None
+        for sub in ast.walk(node):
+            if isinstance(sub, ast.Call):
+                yield name, sub
+
+
+def test_one_python_seam_rule():
+    """multimodal.synth_payloads is the only synth seam and
+    lineage.fan_out holds the only partition-count probe."""
+    seams, probes, strays = [], [], []
+    for path in _gated_sources():
+        rel = os.path.relpath(path, REPO)
+        if not rel.startswith("osmexpress_spark"):
+            continue
+        with open(path) as f:
+            text = f.read()
+        if "narrow_scan" in text:
+            strays.append(rel)
+        for fn, call in _calls_by_function(ast.parse(text)):
+            attr = getattr(call.func, "attr", None)
+            if attr == "getNumPartitions":
+                probes.append((rel, fn))
+            elif attr == "mapInPandas" and any(
+                isinstance(a, ast.Name) and a.id == "SYNTH_SCHEMA"
+                for a in call.args
+            ):
+                seams.append((rel, fn))
+    assert seams == [
+        (os.path.join("osmexpress_spark", "operators", "multimodal.py"),
+         "synth_payloads")
+    ]
+    assert probes == [
+        (os.path.join("osmexpress_spark", "lineage.py"), "fan_out")
+    ]
     assert not strays, strays

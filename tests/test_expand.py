@@ -112,3 +112,21 @@ def test_fmt_for_compressed_dispatch():
 
     with pytest.raises(ValueError, match="cannot infer source format"):
         _fmt_for("planet.pbf.gz")
+
+
+def test_fixture_dataset_concurrent_builders(spark, tmp_path):
+    """Four threads of one session building the same missing fixture
+    (the bulk parity test's shape) leave exactly one write behind."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    path = str(tmp_path / "fx")
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        futures = [
+            pool.submit(testing.ensure_fixture_dataset, spark, path, 300, 7)
+            for _ in range(4)
+        ]
+        assert [f.result(timeout=300) for f in futures] == [path] * 4
+    rows = testing.generate(n_nodes=300, seed=7)
+    tables = Dataset(spark, path).tables()
+    for name in ("locations", "nodes", "ways", "relations"):
+        assert tables[name].count() == len(rows[name]), name

@@ -21,6 +21,32 @@ def _final_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def test_key_exchange_gate_reads_reused_exchanges():
+    """A reused exchange prints its referenced exchange after the
+    ``ReusedExchange`` token: reused round-robin and broadcast
+    exchanges pass the gate, a reused hash exchange still fails."""
+    union = (
+        "Union\n"
+        ":- Exchange RoundRobinPartitioning(4), REPARTITION_BY_NUM, "
+        "[plan_id=20]\n"
+        ":  +- Range (0, 1000, step=1, splits=4)\n"
+        "+- ReusedExchange [id#4L], Exchange RoundRobinPartitioning(4), "
+        "REPARTITION_BY_NUM, [plan_id=23]\n"
+    )
+    assert_no_key_exchange(union)
+    assert_no_key_exchange(
+        "BroadcastHashJoin [k#1L], [k#7L], Inner, BuildRight, false\n"
+        "+- ReusedExchange [k#7L], BroadcastExchange "
+        "HashedRelationBroadcastMode(List(input[0, bigint, false]),false), "
+        "[plan_id=31]\n"
+    )
+    with pytest.raises(AssertionError):
+        assert_no_key_exchange(
+            "+- ReusedExchange [k#1L, cnt#2L], Exchange hashpartitioning"
+            "(k#1L, 4), ENSURE_REQUIREMENTS, [plan_id=40]\n"
+        )
+
+
 def test_range_scan_pushes_or_of_ranges(spark):
     plan = _final_plan(live()["q_range_scan"](spark, SF_DIR))
     assert "PushedFilters: [" in plan
@@ -123,7 +149,7 @@ def test_pq_topk_broadcasts_queries_no_python(spark):
 
 def test_pq_encode_zero_shuffle(spark):
     # encoding is a pure column expression over one scan; no KEY
-    # shuffle — the r11 scale-adaptive embeddings fan-out may
+    # shuffle — the embeddings fan-out (lineage.fan_out) may
     # round-robin the small vector frame when the scan is narrower
     # than the session's slots
     plan = _final_plan(live()["q_pq_encode"](spark, SF_DIR))
@@ -328,7 +354,7 @@ def test_embedding_gram_single_mapside_exchange(spark):
         live()["q_embedding_gram"](spark, SF_DIR)
     )
     # exactly one KEY shuffle (the map-side-combined aggregate); the
-    # r11 scale-adaptive embeddings fan-out may add a round-robin
+    # embeddings fan-out (lineage.fan_out) may add a round-robin
     # exchange before the per-row dot products
     assert plan.count("Exchange hashpartitioning") == 1
     assert "MapInArrow" in plan

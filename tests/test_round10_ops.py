@@ -345,7 +345,7 @@ def test_round10_staged_plans_stay_jvm_side(spark):
             assert "ReadSchema: struct<doc_id:bigint>" in plan
         elif name != "q_warc_census":
             # blob census gates: one Arrow seam; no payload or
-            # key shuffle (the r11 scale-adaptive seam fan-out may
+            # key shuffle (lineage.fan_out may
             # round-robin the tiny id column before the seam)
             assert "MapInPandas" in plan
             assert_no_key_exchange(plan, name)
@@ -367,7 +367,7 @@ def test_mp3_decode_gate_plan(spark):
     df.write.format("noop").mode("overwrite").save()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
-    # no key/payload shuffle; the r11 scale-adaptive seam fan-out
+    # no key/payload shuffle; the seam fan-out (lineage.fan_out)
     # may round-robin the tiny id column before the Arrow seam
     assert_no_key_exchange(plan)
     assert "BatchEvalPython" not in plan

@@ -654,7 +654,7 @@ def test_vorbis_pcm_gate_plan(spark):
     df.write.format("noop").mode("overwrite").save()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan
-    # no key/payload shuffle; the r11 scale-adaptive seam fan-out
+    # no key/payload shuffle; the seam fan-out (lineage.fan_out)
     # may round-robin the tiny id column before the Arrow seam
     assert_no_key_exchange(plan)
     assert "BatchEvalPython" not in plan
